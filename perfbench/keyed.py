@@ -6,12 +6,9 @@ For each operator a bulk generation fills the state store with ``keys``
 keys in one drain (the load), then ``updates`` single-key generations are
 released and one resumed drain over the same checkpoint and state
 directory runs them as single-key microbatches (the updates).  Every
-generation is staged during set-up.  The bulk generations go through
-``testing.stage_generation_file``; the single-row update generations are
-written straight with pyarrow under the same protocol (one parquet file
-``gen-<seq>.parquet`` per generation, mtime stamped ``1_700_000_000 + seq``),
-which saves one Spark write job per update.  The update files wait in a
-side directory and are moved into the source directory between the two
+generation is staged during set-up with ``testing.stage_generation_file``,
+the engine's own staging protocol.  The update generations are staged into
+a side directory and moved into the source directory between the two
 drains, so the load drain cannot see them.
 
 The seed picks which keys are updated, their new values and the as-of probe
@@ -26,8 +23,6 @@ import os
 import random
 import statistics
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from pyspark_engine import StreamBuilder as BatchBuilder
@@ -42,8 +37,6 @@ from pyspark_engine.testing import stage_generation_file
 BASE = dt.datetime(2024, 1, 1)
 HOUR = dt.timedelta(hours=1)
 _MIX = 997  # key weight modulus for the checksums: catches values moved between keys
-_MTIME_BASE = 1_700_000_000  # stage_generation_file's default mtime base
-_TS = pa.timestamp("us", tz="UTC")
 
 
 def _dec(c):
@@ -78,13 +71,11 @@ class Operator:
             if f.startswith("gen-"):
                 os.rename(os.path.join(self.pending, f), os.path.join(self.src, f))
 
-    def stage_updates(self, rows: list[tuple], schema: pa.Schema) -> None:
-        os.makedirs(self.pending, exist_ok=True)
+    def stage_updates(self, rows: list[tuple], schema: str) -> None:
+        """Stage one single-row generation per update, numbered after the
+        bulk generation 0."""
         for seq, row in enumerate(rows, start=1):
-            table = pa.Table.from_pylist([dict(zip(schema.names, row))], schema=schema)
-            dst = os.path.join(self.pending, f"gen-{seq:06d}.parquet")
-            pq.write_table(table, dst)
-            os.utime(dst, (_MTIME_BASE + seq, _MTIME_BASE + seq))
+            stage_generation_file(self.spark.createDataFrame([row], schema), self.pending, seq)
 
 
 class TTJoin(Operator):
@@ -118,7 +109,7 @@ class TTJoin(Operator):
             k, v = self.rng.randrange(n), self.rng.randrange(10**9)
             rows.append((k, v, i))
             self.final[k] = v
-        self.stage_updates(rows, pa.schema([("k", pa.int64()), ("lv", pa.int64()), ("lo", pa.int64())]))
+        self.stage_updates(rows, "k long, lv long, lo long")
 
     def drain(self):
         return join_tables_streaming(
@@ -180,7 +171,7 @@ class Suppress(Operator):
             v = self.rng.randrange(10**6)
             rows.append((f"k{k}", v, BASE + dt.timedelta(seconds=i)))
             self.final[k] = v
-        self.stage_updates(rows, pa.schema([("k", pa.string()), ("v", pa.int32()), ("ts", _TS)]))
+        self.stage_updates(rows, "k string, v int, ts timestamp")
         self.store = f"perfbench_suppress_{os.getpid()}"
 
     def drain(self):
@@ -245,7 +236,7 @@ class AsOf(Operator):
         )
         rows = [self._probe(i) for i in range(1, self.updates + 1)]
         self.probes += rows
-        self.stage_updates(rows, pa.schema([("k", pa.int64()), ("ts", _TS), ("sid", pa.int64())]))
+        self.stage_updates(rows, "k long, ts timestamp, sid long")
         self.out = os.path.join(self.root, "out")
 
     def drain(self):
@@ -302,7 +293,7 @@ def run(ctx, keys: int, updates: int, warm_keys: int) -> dict:
         # the transformWithState Python workers start here, not in a timed
         # step (warming the other two operators as well moved their loads
         # by under 10% and cost 15 s of set-up)
-        warm = TTJoin(spark, os.path.join(ctx.tmp, "warm"), warm_keys, 1, random.Random(0))
+        warm = TTJoin(spark, os.path.join(ctx.tmp, "warm"), warm_keys, 0, random.Random(0))
         warm.stage()
         warm.drain()
     rng = random.Random(ctx.seed)
@@ -314,7 +305,7 @@ def run(ctx, keys: int, updates: int, warm_keys: int) -> dict:
 
     records = []
     for op in ops:
-        ctx.attempted += 2
+        ctx.attempted += 1
         rec = {"op": op}
         try:
             with ctx.step(op.name, "load") as load:

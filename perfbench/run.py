@@ -172,7 +172,6 @@ def isolate(tmp: str, trace: bool) -> None:
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(tmp, "local")
     path = os.environ.get("PYTHONPATH")
     os.environ["PYTHONPATH"] = ROOT + (os.pathsep + path if path else "")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     conf = {
         "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse"),
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.path.join(tmp, 'tmp')}",
@@ -474,6 +473,7 @@ def environment(run: Run) -> dict:
         "seed": run.seed,
         "master": f"local[{n}]",
         "shuffle_partitions": n,
+        "driver_memory": run.spark.conf.get("spark.driver.memory"),
         "spark": run.spark.version,
         "java": jvm.java.lang.System.getProperty("java.version"),
         "python": platform.python_version(),

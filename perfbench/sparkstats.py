@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import json
 import re
-import statistics
 import threading
 import time
 import urllib.request
@@ -17,16 +16,24 @@ import urllib.request
 from pyspark.sql.streaming import StreamingQueryListener
 
 
-def retained_heap_mb(spark, readings: int = 3) -> float:
-    """Driver JVM heap in use after a forced GC, in MB: the median of a few
-    GC-then-read rounds, so a collection racing a late allocation does not
-    decide the value."""
+def retained_heap_mb(spark, max_rounds: int = 10, pause_s: float = 0.5) -> float:
+    """Driver JVM heap in use after a forced GC, in MB.  Objects a GC
+    only hands to a cleanup queue (finalizers, weak-reference queues such as
+    Spark's ContextCleaner) are freed in a later GC: the first reading at the
+    end of a batch run was sometimes 600 MB against 98 MB a round later.  So
+    GC-then-read rounds repeat, ``pause_s`` apart, until the reading stops
+    falling; the lowest reading is the value (a late allocation can only
+    raise one)."""
     mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
-    used = []
-    for _ in range(readings):
+    low = float("inf")
+    for _ in range(max_rounds):
         mx.gc()
-        used.append(mx.getHeapMemoryUsage().getUsed() / 2**20)
-    return statistics.median(used)
+        used = mx.getHeapMemoryUsage().getUsed() / 2**20
+        if used > low - 1:
+            return min(low, used)
+        low = used
+        time.sleep(pause_s)
+    return low
 
 
 def group_jobs(spark, group: str) -> list[int]:

@@ -135,6 +135,32 @@ def test_injected_exception_counts_as_failed(spark, tmp_path, monkeypatch):
     assert values["first_result_s"] > 0
 
 
+def test_failing_operator_counts_once(spark, tmp_path, monkeypatch):
+    """An operator whose drain raises is one attempted item and one failure."""
+    from perfbench import keyed
+    from perfbench.sparkstats import ProgressLog
+
+    class Broken(keyed.Operator):
+        name = "broken"
+
+        def stage(self):
+            pass
+
+        def drain(self):
+            raise RuntimeError("injected")
+
+    class Warm(Broken):
+        def drain(self):
+            pass
+
+    monkeypatch.setattr(keyed, "TTJoin", Warm)  # the set-up warm-up operator
+    monkeypatch.setattr(keyed, "OPERATORS", (Broken,))
+    run = bench.Run("keyed_stream", 1, 0.0, False, str(tmp_path))
+    run.spark, run.progress = spark, ProgressLog()
+    keyed.run(run, 10, 1, 10)
+    assert (run.attempted, [item for item, _ in run.failures]) == (1, ["broken"])
+
+
 # ---------------------------------------------------------------- spans
 
 
