@@ -1,26 +1,24 @@
 """transformWithState (arbitrary-state-v2) engines for the continuous
-table operators — the Spark-4-native successors of the pandas keyed engines
-in ``streaming.py`` (VERDICT r11 task 1).
+table operators — the per-key scale engines behind ``engine='tws'`` (the
+``engine=None`` default) of ``streaming.join_tables_streaming``,
+``join_fk_streaming``, ``suppress_buffered`` and
+``join_table_asof_streaming``; the public docstrings there carry the
+contracts and designs.  ``engine='exact'`` (the parquet ping-pong loops in
+``streaming.py``) is the differential oracle.
 
-Same architectures as ``_join_tables_keyed`` / ``_join_fk_keyed`` /
-``_suppress_keyed`` (tagged-union changelogs, per-key state, emissions
-appended to ``out/sink_batch=<id>`` partitions, latest-per-key snapshot
-fold), with the Arrow/pandas boundary replaced by the Row-based
-``transformWithState`` API:
+Shared design: tagged-union changelogs, per-key state in the RocksDB state
+store, emissions written to ``out/sink_batch=<id>`` partitions (overwritten
+on crash-replay — exactly-once), and a latest-per-key snapshot fold of that
+emission log, through the Row-based ``transformWithState`` API:
 
-* **No string tunnel.**  ``transformWithState`` hands the processor
+* **Native types.**  ``transformWithState`` hands the processor
   ``pyspark.sql.Row`` objects, where a nullable int64 column stays a Python
-  ``int`` (the pandas engines receive float64-coerced slices as soon as a
-  union null-pad or a real null appears in the group, losing bigints past
-  2^53 — hence their decimal-string tunnel).  Typed value state likewise
-  round-trips int64/decimal/timestamp exactly (pinned by
-  ``tests/test_tws.py``).
+  ``int``; typed value state likewise round-trips int64/decimal/timestamp
+  exactly (pinned by ``tests/test_tws.py``).
 * **NaN is preserved.**  Rows and value state keep float NaN as NaN, so
-  these engines agree with the ``exact`` loops where the pandas engines
-  coerce NaN→null (see ``_clean_state_value``).
-* **Timers instead of GroupState timeouts** (suppress): per-key event-time
-  timers survive across invocations and are deleted/re-registered
-  explicitly.
+  these engines agree with the ``exact`` loops.
+* **Timers** (suppress): per-key event-time timers survive across
+  invocations and are deleted/re-registered explicitly.
 
 Known constraint (upstream): PySpark's value-state client cannot round
 -trip NESTED CONTAINER fields (an ``array<struct<...>>`` value state
@@ -76,9 +74,9 @@ from .streaming import (
 
 _TWS_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-# version stamps, same contract as streaming.py's _KEYED_STATE_VERSION: a
-# populated dir written by a different engine/version is refused
-# descriptively instead of failing Spark's state-schema check mid-drain
+# version stamps: a populated dir written by a different engine/version is
+# refused descriptively instead of failing Spark's state-schema check
+# mid-drain
 _TWS_TTJOIN_VERSION = "1"
 _TWS_FKJOIN_VERSION = "1"
 _TWS_SUPPRESS_VERSION = "1"
@@ -90,7 +88,7 @@ def require_tws(spark) -> None:
         raise RuntimeError(
             "engine='tws' needs google.protobuf (transformWithState state "
             "client); neither the protobuf wheel nor the vendored shim "
-            "(vendor/google/protobuf) is importable — use engine='keyed'"
+            "(vendor/google/protobuf) is importable — use engine='exact'"
         )
 
 
@@ -98,9 +96,9 @@ def require_tws(spark) -> None:
 def _rocksdb_provider(spark):
     """transformWithState requires the RocksDB state-store provider (it is
     the only one with multi-column-family support).  Scope the conf to the
-    drain so concurrent/later queries in the same session — e.g. a resumed
-    pandas-keyed checkpoint on the default HDFS provider — keep their own
-    provider.
+    drain so concurrent/later queries in the same session — e.g. a
+    ``stateful_map`` checkpoint on the default HDFS provider — keep their
+    own provider.
 
     Also pins ``spark.sql.session.timeZone=UTC`` for the drain: ``_norm``'s
     contract is that tz-aware input rows normalize to UTC-naive and the
@@ -169,18 +167,12 @@ def _dec_c(v):
 
 
 def _stamp_version(root: str, marker: str, version: str, populated: bool, what: str) -> None:
-    """Engine/version gate for a tws state dir (mirrors streaming.py)."""
-    for other, owner in (
-        ("_GEN", "the exact ping-pong engine"),
-        ("_PSE_TTJOIN_V", "the pandas keyed tt-join engine"),
-        ("_PSE_FKJOIN_V", "the pandas keyed fk-join engine"),
-        ("_PSE_STATE_V", "the pandas keyed suppress engine"),
-    ):
-        if other != marker and os.path.exists(os.path.join(root, other)):
-            raise ValueError(
-                f"state dir {root!r} was written by {owner}; resume it with the "
-                "engine that wrote it, or start a fresh state_dir for engine='tws'"
-            )
+    """Engine/version gate for a tws state dir."""
+    if os.path.exists(os.path.join(root, "_GEN")):
+        raise ValueError(
+            f"state dir {root!r} was written by the exact ping-pong engine; resume "
+            "it with engine='exact', or start a fresh state_dir for engine='tws'"
+        )
     ver_path = os.path.join(root, marker)
     ver = _read_bind(ver_path)
     if populated and ver != version:
@@ -199,9 +191,8 @@ def _norm(v):
     """Normalize a Row/state value to a timezone-naive, plain-Python form
     for ORDER comparisons and state tuples: tz-aware datetimes → UTC-naive
     (input rows arrive session-tz-aware, value state returns naive — the
-    engines pin the session tz to UTC).  Unlike the pandas engines'
-    _clean_state_value, NaN is NOT coerced (Rows keep it, matching the
-    exact loops)."""
+    engines pin the session tz to UTC).  NaN is NOT coerced (Rows keep it,
+    matching the exact loops)."""
     import datetime as dt
 
     if isinstance(v, dt.datetime) and v.tzinfo is not None:
@@ -335,11 +326,14 @@ def join_tables_tws(
     state_dir: str | None,
     checkpoint: str | None,
 ) -> DataFrame:
-    """transformWithState engine of ``join_tables_streaming`` — the same
-    union/fold/emission-log architecture as ``_join_tables_keyed`` (see its
-    docstring for the contract and the reference citation), minus the
-    string tunnel: value columns ride the union and the typed value state
-    in their NATIVE types.  Parity with both older engines is pinned by the
+    """transformWithState engine of ``join_tables_streaming`` (see its
+    docstring for the contract and the reference citation): the two tagged
+    changelogs union into one ``transformWithState`` grouped by the JOIN
+    KEY, per-key state = (latest left row, latest right row), value columns
+    in their NATIVE types.  Join-key columns never ride the union
+    null-padded — both sides' keys map onto the shared non-null ``__jk*``
+    grouping columns.  No watermark: a KTable upsert admits late data
+    unconditionally.  Parity with the exact loop is pinned by the
     engine-differential fuzz and the tws test family."""
     spark0 = left.df.sparkSession
     require_tws(spark0)
@@ -609,13 +603,14 @@ def suppress_tws(
     checkpoint: str | None,
     store_name: str | None,
 ) -> DataFrame:
-    """transformWithState engine of ``suppress_buffered`` — the same design
-    as ``_suppress_keyed`` (decoupled clock-copy watermark, per-key buffer
-    state, emission renumbering; see its docstring for the KS contract),
-    with native-typed state (no string tunnel) and explicit per-key
-    event-time timers.  The buffered view for ``store_name`` reads the
-    transformWithState column family through the state source
-    (``stateVarName``)."""
+    """transformWithState engine of ``suppress_buffered`` (see its
+    docstring for the KS contract): decoupled clock-copy watermark, per-key
+    buffer state = (buffer entry time | null, latest event time, latest
+    row) — the latest-row half persists after emission so a late record
+    cannot resurrect an older value — emission renumbering, native-typed
+    state and explicit per-key event-time timers.  The buffered view for
+    ``store_name`` reads the transformWithState column family through the
+    state source (``stateVarName``)."""
     from .runtime import epoch_ms
 
     spark0 = src.df.sparkSession
@@ -665,7 +660,11 @@ def suppress_tws(
     # Decoupled watermark: every row ships twice — a DATA copy with NULL
     # event time (never late-filtered, does not move the watermark) and a
     # CLOCK copy carrying ts with all value columns nulled (shuffle weight)
-    # that exists only to advance the watermark.  See _suppress_keyed.
+    # that exists only to advance the watermark.  Spark's stateful operators
+    # filter input rows older than the late-events watermark, but KS admits
+    # arbitrarily late updates into the suppress buffer; a clock copy dropped
+    # as late is by definition one that would not have advanced the running
+    # max anyway.  The processor folds only data copies.
     sdf = sdf.select(*cols, epoch_ms(tcol).alias("__ev_ms")).select(
         "*", F.explode(F.array(F.lit(0), F.lit(1))).alias("__clk")
     )
@@ -933,14 +932,13 @@ def join_fk_tws(
     state_dir: str | None,
     checkpoint: str | None,
 ) -> DataFrame:
-    """transformWithState engine of ``join_fk_streaming`` — the same KIP-213
-    two-stage architecture as ``_join_fk_keyed`` (see its docstring for the
-    full design): a PK-keyed subscription resolver feeding a durable parquet
-    sub-log, then an FK-keyed join state fanning out U/D emissions.  Native
-    types end to end (no string tunnel); the subscriber list lives in LIST
-    state, and container-typed user VALUE columns ride both states as
-    pickled binary (_enc_c — the upstream value-state client cannot round
-    -trip nested containers)."""
+    """transformWithState engine of ``join_fk_streaming`` — the KIP-213
+    two-stage architecture (see its docstring for the full design): a
+    PK-keyed subscription resolver feeding a durable parquet sub-log, then
+    an FK-keyed join state fanning out U/D emissions.  Native types end to
+    end; the subscriber list lives in LIST state, and container-typed user
+    VALUE columns ride both states as pickled binary (_enc_c — the upstream
+    value-state client cannot round-trip nested containers)."""
     spark0 = left.df.sparkSession
     require_tws(spark0)
     l_key = list(left.key)

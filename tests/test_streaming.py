@@ -813,13 +813,12 @@ def test_file_sink_roundtrip(spark, tmp_path):
     pd.testing.assert_frame_equal(_sorted_pdf(got, cols), _sorted_pdf(want, cols))
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_tt_join_streaming_parity(spark, tmp_path, engine):
     """Streaming KTable⋈KTable over multi-microbatch changelogs == batch
     KTable.join — the continuous analog of KTableKTableJoinProcessor.cs:
-    20-48 — from BOTH engines: the keyed applyInPandasWithState scale
-    engine (O(changed keys) per batch) and the exact ping-pong loop
-    (SURVEY §7.3.2)."""
+    20-48 — from BOTH engines: the per-key tws scale engine (O(changed
+    keys) per batch) and the exact ping-pong loop (SURVEY §7.3.2)."""
     from pyspark_engine.streaming import join_tables_streaming
 
     ev = (
@@ -871,7 +870,7 @@ def _write_source_file(spark, rows, schema, src_dir, seq):
     stage_generation_file(spark.createDataFrame(rows, schema), src_dir, seq)
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_until_time_limit_streaming(spark, tmp_path, engine):
     """KIP-328 Suppressed.untilTimeLimit over real microbatches: entries
     emit exactly when stream time passes entry_time + limit; an
@@ -879,8 +878,8 @@ def test_suppress_until_time_limit_streaming(spark, tmp_path, engine):
     (the update's own ts would not be due yet — only the preserved entry
     time makes it due); undelivered entries stay buffered at drain end.
     Identical emissions — values, reasons, AND batch ids — from BOTH
-    engines: the keyed applyInPandasWithState scale engine and the exact
-    ping-pong buffer."""
+    engines: the per-key tws scale engine and the exact ping-pong
+    buffer."""
     import datetime as dt
 
     from pyspark_engine.streaming import suppress_buffered
@@ -913,13 +912,13 @@ def test_suppress_until_time_limit_streaming(spark, tmp_path, engine):
     assert [r["k"] for r in spark.table("sup_buf").collect()] == ["d"]
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_nullable_bigint_precision(spark, tmp_path, engine):
     """r9 verdict item 2: a bigint value column containing REAL nulls in
-    data rows forces the whole Arrow column to float64 on the way into the
-    keyed engine's state fn, so int(float) silently corrupted values past
-    2^53.  Both engines must round-trip 2^53+1 exactly alongside null
-    values and null-bearing rows must emit with their nulls intact."""
+    data rows must never take a float64 hop (int(float) silently corrupts
+    values past 2^53).  Both engines must round-trip 2^53+1 exactly
+    alongside null values and null-bearing rows must emit with their nulls
+    intact."""
     import datetime as dt
 
     from pyspark_engine.streaming import suppress_buffered
@@ -964,18 +963,18 @@ def test_suppress_nullable_bigint_precision(spark, tmp_path, engine):
     assert rows["e"]["v"] == big and rows["e"]["n"] == 2
     assert dict(got.dtypes)["v"] == "bigint" and dict(got.dtypes)["n"] == "int"
     # the interactive-query store view must round-trip types and values too
-    # (the keyed engine reads them back out of the string-tunneled state)
+    # (the tws engine reads them back out of its value state)
     buf = spark.table(f"bigint_buf_{engine}")
     assert dict(buf.dtypes)["v"] == "bigint"
     assert [(r["k"], r["v"]) for r in buf.collect()] == [("d", 1)]
 
 
 def test_suppress_keyed_rejects_pre_epoch_event_times(spark, tmp_path):
-    """ADVICE r9: engine=None auto-selects the keyed engine, whose Spark
-    watermark is floored at 0 — pre-epoch (< 1970) event times would sit
-    buffered forever and the drain returned silently empty.  The state fn
-    now raises loudly, pointing at engine='exact' (which handles them: its
-    stream-time fold is plain Python ints)."""
+    """ADVICE r9: engine=None auto-selects the per-key tws engine, whose
+    Spark watermark is floored at 0 — pre-epoch (< 1970) event times would
+    sit buffered forever and the drain returned silently empty.  The
+    processor raises loudly, pointing at engine='exact' (which handles
+    them: its stream-time fold is plain Python ints)."""
     import datetime as dt
 
     import pytest as _pytest
@@ -996,7 +995,7 @@ def test_suppress_keyed_rejects_pre_epoch_event_times(spark, tmp_path):
         )
 
     with _pytest.raises(Exception, match="pre-epoch"):
-        suppress_buffered(mk(), time_col="ts", engine="keyed")
+        suppress_buffered(mk(), time_col="ts")
 
     # review finding (r10): epoch 0 EXACTLY is just as undeliverable (the
     # engine reads watermark 0 as "none yet"), so the guard is <= 0
@@ -1008,7 +1007,7 @@ def test_suppress_keyed_rejects_pre_epoch_event_times(spark, tmp_path):
         .suppress(until_time_limit_ms=60_000)
     )
     with _pytest.raises(Exception, match="pre-epoch"):
-        suppress_buffered(tbl0, time_col="ts", engine="keyed")
+        suppress_buffered(tbl0, time_col="ts")
     # the exact engine handles the same changelog: both due at drain end?
     # no — nothing advances past entry+limit (only two pre-epoch points a
     # day apart, limit 60 s): 1960-01-02 stream time makes 'a' due
@@ -1074,14 +1073,14 @@ def test_suppress_buffer_bounds_emit_early_and_shutdown(spark, tmp_path):
         run_available_now(mk().suppress(until_time_limit_ms=60_000), output_mode="update")
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_fk_join_streaming_parity(spark, tmp_path, engine):
     """Streaming KTable.join_fk over multi-microbatch changelogs == batch
     KTable.join_fk — INCLUDING an FK-change step: customer 1 re-points its
     fk from 10 to 20 in a later changelog record, which must retract the
     old join row and emit the new one (the re-subscription round-trip
     KIP-213's subscription/response topics exist to provide) — from BOTH
-    engines: the keyed two-stage subscription/response realization and the
+    engines: the tws two-stage subscription/response realization and the
     exact changelog-state recompute loop."""
     import datetime as dt
 
@@ -1923,12 +1922,12 @@ def test_cogroup_streaming_restart_recovers_generation(spark, tmp_path):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_tt_join_streaming_restart_recovers_generation(spark, tmp_path, engine):
     """join_tables_streaming restart: re-invoking with the same durable
     checkpoint + state_dir after new changelog data continues from the
     committed state snapshot (the _GEN marker for the exact engine, the
-    checkpointed keyed store + emission log for the keyed one), replaying
+    checkpointed RocksDB store + emission log for tws), replaying
     only the new microbatch; result == batch join over the full changelogs.
     Run 1 uses an odd microbatch count so a gen-reset would read the stale
     side."""
@@ -1967,63 +1966,29 @@ def test_tt_join_streaming_restart_recovers_generation(spark, tmp_path, engine):
     assert got == {1: (30, 100), 2: (7, 200)}
 
 
-def test_tt_join_keyed_bigint_tunnel(spark, tmp_path):
-    """The keyed tt-join engine string-tunnels integral value columns for
-    the same reason as the keyed suppress engine: the OTHER side's columns
-    are null on every union row, so every integral slice would ride
-    float64 through Arrow and corrupt bigints past 2^53.  Values must
-    round-trip exactly, nulls stay null, and the unmatched-left row of a
-    left join carries typed nulls."""
-    import datetime as dt
-
-    from pyspark_engine.streaming import join_tables_streaming
-
-    big = (1 << 53) + 1  # int(float(big)) == big - 1: detects any float hop
-    neg_big = -(1 << 53) - 3
-
-    def t(m):
-        return dt.datetime(2024, 1, 1, 0, m)
-
-    ldf = spark.createDataFrame(
-        [(1, big, t(0)), (2, None, t(0)), (3, 7, t(0))],
-        "k int, lv bigint, lts timestamp",
-    )
-    rdf = spark.createDataFrame(
-        [(1, neg_big, t(1)), (2, big, t(1))], "rk int, rv bigint, rts timestamp"
-    )
-    ldf.write.parquet(str(tmp_path / "l"))
-    rdf.write.parquet(str(tmp_path / "r"))
-    sb = StreamingBuilder(spark)
-    got = join_tables_streaming(
-        sb.file_stream(str(tmp_path / "l"), key="k", ts="lts"),
-        sb.file_stream(str(tmp_path / "r"), key="rk", ts="rts"),
-        how="left",
-        ts_alias="jts",
-        engine="keyed",
-    )
-    assert dict(got.dtypes)["lv"] == "bigint" and dict(got.dtypes)["rv"] == "bigint"
-    rows = {r["k"]: r for r in got.collect()}
-    assert rows[1]["lv"] == big and rows[1]["rv"] == neg_big and rows[1]["jts"] == t(1)
-    assert rows[2]["lv"] is None and rows[2]["rv"] == big
-    assert rows[3]["lv"] == 7 and rows[3]["rv"] is None and rows[3]["jts"] == t(0)
-
-
 def test_tt_join_engine_state_dirs_do_not_mix(spark, tmp_path):
     """A state dir written by one tt-join engine must be refused by the
     other (their layouts are incompatible: ping-pong generations + flat
-    out/ vs keyed store + sink_batch partitions), and a keyed dir whose
-    state-schema version is foreign is refused instead of hitting Spark's
-    opaque state-schema failure mid-drain."""
+    out/ vs RocksDB store + sink_batch partitions), and a tws dir whose
+    state version is foreign is refused instead of hitting Spark's opaque
+    state-schema failure mid-drain.  The tws drain also round-trips
+    bigints past 2^53 and typed nulls exactly (native value state)."""
     import datetime as dt
     import os
 
     from pyspark_engine.streaming import join_tables_streaming
 
+    big = (1 << 53) + 1  # int(float(big)) == big - 1: detects any float hop
+
     def t(m):
         return dt.datetime(2024, 1, 1, 0, m)
 
-    ldf = spark.createDataFrame([(1, "a", t(0))], "k int, lv string, lts timestamp")
-    rdf = spark.createDataFrame([(1, "x", t(0))], "rk int, rv string, rts timestamp")
+    ldf = spark.createDataFrame(
+        [(1, big, t(0)), (2, None, t(0))], "k int, lv bigint, lts timestamp"
+    )
+    rdf = spark.createDataFrame(
+        [(1, -big, t(1)), (2, big, t(1))], "rk int, rv bigint, rts timestamp"
+    )
     ldf.write.parquet(str(tmp_path / "l"))
     rdf.write.parquet(str(tmp_path / "r"))
     sb = StreamingBuilder(spark)
@@ -2039,30 +2004,32 @@ def test_tt_join_engine_state_dirs_do_not_mix(spark, tmp_path):
         )
 
     ex_state, ex_ck = str(tmp_path / "ex-state"), str(tmp_path / "ex-ck")
-    assert run("exact", ex_state, ex_ck).count() == 1
-    with pytest.raises(ValueError, match="exact tt-join engine"):
-        run("keyed", ex_state, ex_ck)
+    assert run("exact", ex_state, ex_ck).count() == 2
+    with pytest.raises(ValueError, match="exact ping-pong engine"):
+        run("tws", ex_state, ex_ck)
 
-    ky_state, ky_ck = str(tmp_path / "ky-state"), str(tmp_path / "ky-ck")
-    assert run("keyed", ky_state, ky_ck).count() == 1
+    tw_state, tw_ck = str(tmp_path / "tw-state"), str(tmp_path / "tw-ck")
+    got = {r["k"]: (r["lv"], r["rv"]) for r in run("tws", tw_state, tw_ck).collect()}
+    assert got == {1: (big, -big), 2: (None, big)}
     with pytest.raises(ValueError, match="no\\s+readable _GEN marker"):
-        run("exact", ky_state, ky_ck)
+        run("exact", tw_state, tw_ck)
 
-    # version gate: a populated keyed dir stamped with a foreign version
-    with open(os.path.join(ky_state, "_PSE_TTJOIN_V"), "w") as f:
+    # version gate: a populated tws dir stamped with a foreign version
+    with open(os.path.join(tw_state, "_PSE_TWS_TTJOIN_V"), "w") as f:
         f.write("0")
-    with pytest.raises(ValueError, match="state-schema version"):
-        run("keyed", ky_state, ky_ck)
+    with pytest.raises(ValueError, match="with version 0"):
+        run("tws", tw_state, tw_ck)
 
 
 def test_fk_join_keyed_tunnel_restart_and_guards(spark, tmp_path):
-    """Keyed fk-join engine specifics in one staged scenario: bigint values
-    past 2^53 round-trip the two-stage state exactly (with real nulls and
-    a null fk riding the subscription log); a resumed drain continues from
-    both checkpoints and applies an FK flip arriving AFTER the first drain
-    (retract + re-subscribe across drains); and the state-dir guards fire —
-    exact-loop dirs are refused, foreign version stamps are refused, and a
-    Column-valued fk cannot select the keyed engine."""
+    """Per-key (tws) fk-join engine specifics in one staged scenario:
+    bigint values past 2^53 round-trip the two-stage state exactly (with
+    real nulls and a null fk riding the subscription log); a resumed drain
+    continues from both checkpoints and applies an FK flip arriving AFTER
+    the first drain (retract + re-subscribe across drains); and the
+    state-dir guards fire — exact-loop dirs are refused, foreign version
+    stamps are refused, and a Column-valued fk cannot select the tws
+    engine."""
     import datetime as dt
     import os
 
@@ -2096,7 +2063,7 @@ def test_fk_join_keyed_tunnel_restart_and_guards(spark, tmp_path):
             how=how,
             state_dir=state,
             checkpoint=ckpt,
-            engine="keyed",
+            engine="tws",
         )
 
     got = {r["pk"]: r for r in run("left").collect()}
@@ -2114,21 +2081,21 @@ def test_fk_join_keyed_tunnel_restart_and_guards(spark, tmp_path):
     assert len(got) == 3  # the old (1 -> 10) join row was retracted
 
     # guards: foreign version stamp refused; exact dirs refused; Column fk
-    with open(os.path.join(state, "_PSE_FKJOIN_V"), "w") as f:
+    with open(os.path.join(state, "_PSE_TWS_FKJOIN_V"), "w") as f:
         f.write("0")
-    with pytest.raises(ValueError, match="state-schema version"):
+    with pytest.raises(ValueError, match="with version 0"):
         run("left")
     ex_state = str(tmp_path / "ex-state")
     os.makedirs(ex_state)
     open(os.path.join(ex_state, "_GEN"), "w").write("1 0")
-    with pytest.raises(ValueError, match="exact fk-join engine"):
+    with pytest.raises(ValueError, match="exact ping-pong engine"):
         join_fk_streaming(
             sb.file_stream(lsrc, key="pk", ts="lts"),
             sb.file_stream(rsrc, key="rk", ts="rts"),
             fk="fk",
             how="left",
             state_dir=ex_state,
-            engine="keyed",
+            engine="tws",
         )
     with pytest.raises(ValueError, match="string fk column"):
         join_fk_streaming(
@@ -2136,13 +2103,13 @@ def test_fk_join_keyed_tunnel_restart_and_guards(spark, tmp_path):
             sb.file_stream(rsrc, key="rk", ts="rts"),
             fk=F.col("fk"),
             how="left",
-            engine="keyed",
+            engine="tws",
         )
 
 
 @pytest.mark.slow
-def test_keyed_join_crash_replay_idempotent(spark, tmp_path):
-    """Crash-replay robustness of the keyed join engines (same protocol as
+def test_tws_join_crash_replay_idempotent(spark, tmp_path):
+    """Crash-replay robustness of the tws join engines (same protocol as
     the suppress replay test: delete the newest commit marker, re-drain).
     tt join: the replayed microbatch overwrites its own sink_batch
     partition, so the final snapshot is unchanged.  fk join, BOTH stages:
@@ -2187,7 +2154,7 @@ def test_keyed_join_crash_replay_idempotent(spark, tmp_path):
             how="inner",
             state_dir=state,
             checkpoint=ckpt,
-            engine="keyed",
+            engine="tws",
         )
 
     want = {(1, 11, 100), (2, 20, 200)}
@@ -2211,7 +2178,7 @@ def test_keyed_join_crash_replay_idempotent(spark, tmp_path):
             how="inner",
             state_dir=fstate,
             checkpoint=fck,
-            engine="keyed",
+            engine="tws",
         )
 
     fwant = {(1, 20, "b"), (2, 20, "b")}
@@ -2227,9 +2194,9 @@ def test_join_engines_differential_random_changelogs(spark, tmp_path):
     """Engine-differential fuzz for the continuous joins: seeded random
     changelogs with MULTIPLE updates per key per microbatch, out-of-order
     order-values, and random fk flips, drained through BOTH engines — the
-    keyed applyInPandasWithState engines and the exact snapshot loops must
-    produce identical final snapshots (the exact loop doubles as the keyed
-    engines' differential oracle — RECIPES 'which engine')."""
+    per-key tws engines and the exact snapshot loops must produce identical
+    final snapshots (the exact loop doubles as the tws engines'
+    differential oracle — RECIPES 'which engine')."""
     import random
 
     from pyspark_engine.streaming import join_fk_streaming, join_tables_streaming
@@ -2267,11 +2234,9 @@ def test_join_engines_differential_random_changelogs(spark, tmp_path):
             engine=engine,
         )
 
-    keyed = sorted(map(tuple, tt("keyed").collect()))
     exact = sorted(map(tuple, tt("exact").collect()))
     tws = sorted(map(tuple, tt("tws").collect()))
-    assert keyed == exact and len(keyed) > 0
-    assert tws == exact
+    assert tws == exact and len(tws) > 0
 
     # --- fk join (how=left): random fk flips across 3 microbatches
     fk_rows = [
@@ -2296,11 +2261,9 @@ def test_join_engines_differential_random_changelogs(spark, tmp_path):
             engine=engine,
         )
 
-    keyed_fk = sorted(map(tuple, fkj("keyed").collect()))
     exact_fk = sorted(map(tuple, fkj("exact").collect()))
     tws_fk = sorted(map(tuple, fkj("tws").collect()))
-    assert keyed_fk == exact_fk and len(keyed_fk) > 0
-    assert tws_fk == exact_fk
+    assert tws_fk == exact_fk and len(tws_fk) > 0
 
 
 @pytest.mark.slow
@@ -2308,8 +2271,7 @@ def test_join_engines_container_values_differential(spark, tmp_path):
     """r12 verdict task 2 gate: the tws engines with ``array<double>``
     VALUE columns (binary-tunneled state, NaN/None/empty elements included)
     must match the exact snapshot loops on seeded random changelogs — tt
-    join, fk join, and suppress.  The pandas keyed engines refuse
-    containers, so exact is the differential oracle here."""
+    join, fk join, and suppress, with exact as the differential oracle."""
     import math
     import random
 
@@ -2426,11 +2388,11 @@ def test_join_engines_container_values_differential(spark, tmp_path):
 
 
 def test_keyed_engines_reject_reserved_column_names(spark, tmp_path):
-    """r11 review finding: user columns colliding with a keyed engine's
+    """r11 review finding: user columns colliding with a per-key engine's
     internal schema fields (union tags, grouping columns, the sink_batch
     partition column) used to surface as opaque Arrow/parquet errors
-    MID-DRAIN, after state was already written.  Every keyed engine must
-    refuse at construction instead."""
+    MID-DRAIN, after state was already written.  Every per-key (tws)
+    engine must refuse at construction instead."""
     import datetime as dt
 
     from pyspark_engine.streaming import (
@@ -2451,17 +2413,17 @@ def test_keyed_engines_reject_reserved_column_names(spark, tmp_path):
     l1 = mk("k int, sink_batch int, lts timestamp", [(1, 1, t(0))], "k", "lts", "l1")
     r1 = mk("rk int, rv int, rts timestamp", [(1, 1, t(0))], "rk", "rts", "r1")
     with pytest.raises(ValueError, match="engine-internal"):
-        join_tables_streaming(l1, r1, engine="keyed")
+        join_tables_streaming(l1, r1, engine="tws")
 
     l2 = mk("pk int, fk int, op string, lts timestamp", [(1, 1, "x", t(0))], "pk", "lts", "l2")
     r2 = mk("rk2 int, rv2 int, rts2 timestamp", [(1, 1, t(0))], "rk2", "rts2", "r2")
     with pytest.raises(ValueError, match="engine-internal"):
-        join_fk_streaming(l2, r2, fk="fk", engine="keyed")
+        join_fk_streaming(l2, r2, fk="fk", engine="tws")
 
     l3 = mk("k int, __clk int, ts timestamp", [(1, 1, t(0))], "k", "ts", "l3")
     with pytest.raises(ValueError, match="engine-internal"):
         suppress_buffered(
-            l3.to_table().suppress(until_time_limit_ms=60_000), time_col="ts", engine="keyed"
+            l3.to_table().suppress(until_time_limit_ms=60_000), time_col="ts", engine="tws"
         )
 
     # the exact loop's union tag is reserved too
@@ -2718,7 +2680,7 @@ def test_gif_codec_streaming_parity(spark, tmp_path):
     assert got.count() == 30
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_buffered_resume_no_redelivery(spark, tmp_path, engine):
     """Review finding (r8): a drain must return only ITS OWN emissions — a
     resumed drain over the same state_dir + checkpoint must not re-deliver
@@ -2768,7 +2730,7 @@ def test_suppress_buffered_resume_no_redelivery(spark, tmp_path, engine):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_buffered_crash_replay_idempotent(spark, tmp_path, engine):
     """Advisor finding (r8, medium): emission must be idempotent under
     Spark's at-least-once foreachBatch replay.  Simulate a crash between
@@ -2777,7 +2739,7 @@ def test_suppress_buffered_crash_replay_idempotent(spark, tmp_path, engine):
     partition must leave each emission exactly ONCE in the out log, the
     replayed batch's rows ARE re-delivered (the crashed drain never
     returned them to a caller), and the buffer state is unchanged — for
-    BOTH engines (keyed: state-store version rollback recomputes the batch;
+    BOTH engines (tws: state-store version rollback recomputes the batch;
     exact: the _GEN applied-batch marker skips the already-folded state
     mutation while the emission partition stands)."""
     import datetime as dt
@@ -2968,7 +2930,7 @@ def test_suppress_buffered_differential_fuzz(spark, tmp_path, engine):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("engine", ["keyed", "tws"])
+@pytest.mark.parametrize("engine", ["tws"])
 def test_compact_emission_log_tt_join(spark, tmp_path, engine):
     """r11 advice: the emission log grows without bound across resumed
     drains; compact_emission_log folds committed partitions into one base.
@@ -3064,11 +3026,10 @@ def test_compact_emission_log_tt_join(spark, tmp_path, engine):
 
 def test_engine_none_auto_selection_honors_dirs_and_containers(spark, tmp_path):
     """Round-12 review finding 3 + round-13 task 2: the default flip to tws
-    must not break previously working engine=None calls — a state dir
-    stamped by the pandas keyed engine resumes under 'keyed', an exact-loop
-    dir under 'exact'.  Container-typed VALUE columns now auto-select tws
-    (binary tunnel); container columns in a hard position (order/key/fk)
-    route to 'exact'."""
+    must not break previously working engine=None calls — an exact-loop
+    dir resumes under 'exact'.  Container-typed VALUE columns auto-select
+    tws (binary tunnel); container columns in a hard position
+    (order/key/fk) route to 'exact'."""
     import os
 
     from pyspark_engine.streaming import join_tables_streaming
@@ -3097,19 +3058,102 @@ def test_engine_none_auto_selection_honors_dirs_and_containers(spark, tmp_path):
     )
     assert [tuple(r) for r in snap_h.collect()] == [(1, 5, [1], 9, 1)]
 
-    # keyed-stamped dir + engine=None: must resume, not raise the tws guard
+    # exact-stamped dir + engine=None: must resume, not raise the tws guard
     l1 = mk("l1", "k long, lv long, lo long", [(1, 5, 1)], "k")
     r1 = mk("r1", "rk long, rv long, ro long", [(1, 9, 1)], "rk")
     st, ck = str(tmp_path / "st"), str(tmp_path / "ck")
     join_tables_streaming(
         l1, r1, how="inner", l_order=("lo",), r_order=("ro",),
-        state_dir=st, checkpoint=ck, engine="keyed",
+        state_dir=st, checkpoint=ck, engine="exact",
     )
     snap2 = join_tables_streaming(
         l1, r1, how="inner", l_order=("lo",), r_order=("ro",),
         state_dir=st, checkpoint=ck, engine=None,
     )
     assert [tuple(r) for r in snap2.collect()] == [(1, 5, 1, 9, 1)]
+    assert not os.path.exists(os.path.join(st, "_PSE_TWS_TTJOIN_V"))  # exact kept
+
+
+@pytest.mark.parametrize("engine", [None, "keyed"])
+@pytest.mark.parametrize("marker", ["_PSE_TTJOIN_V", "_PSE_FKJOIN_V", "_PSE_STATE_V"])
+def test_removed_keyed_engine_dirs_refused_before_spark_work(spark, tmp_path, marker, engine):
+    """A state dir stamped by the removed pandas keyed engines is refused
+    descriptively — with engine=None (which used to resume it silently) and
+    with engine='keyed' — before any query starts: no checkpoint is
+    created and the dir is left untouched.  compact_emission_log refuses
+    it too instead of folding it."""
+    import datetime as dt
+    import os
+
+    from pyspark_engine.streaming import (
+        compact_emission_log,
+        join_fk_streaming,
+        join_tables_streaming,
+        suppress_buffered,
+    )
+
+    def t(m):
+        return dt.datetime(2024, 1, 1, 0, m)
+
+    sb = StreamingBuilder(spark)
+    st, ck = tmp_path / "state", tmp_path / "ck"
+    (st / "out" / "sink_batch=0").mkdir(parents=True)
+    (st / marker).write_text("1")
+    before = sorted(os.listdir(st))
+
+    def mk(name, schema, rows, key, ts):
+        _write_source_file(spark, rows, schema, str(tmp_path / name), 0)
+        return sb.file_stream(str(tmp_path / name), key=key, ts=ts)
+
+    l1 = mk("l", "pk int, fk int, lts timestamp", [(1, 1, t(0))], "pk", "lts")
+    r1 = mk("r", "rk int, rv int, rts timestamp", [(1, 1, t(0))], "rk", "rts")
+    kw = dict(state_dir=str(st), checkpoint=str(ck), engine=engine)
+    with pytest.raises(ValueError, match="pandas keyed engine, which was removed.*fresh state_dir"):
+        if marker == "_PSE_TTJOIN_V":
+            join_tables_streaming(l1, r1, **kw)
+        elif marker == "_PSE_FKJOIN_V":
+            join_fk_streaming(l1, r1, fk="fk", **kw)
+        else:
+            suppress_buffered(
+                l1.to_table().suppress(until_time_limit_ms=60_000), time_col="lts", **kw
+            )
+    assert not ck.exists() and sorted(os.listdir(st)) == before
+    with pytest.raises(ValueError, match="pandas keyed engine, which was removed"):
+        compact_emission_log(spark, str(st), str(ck), key=("pk",))
+
+
+def test_engine_none_resolution_logs_decision_record(caplog, monkeypatch, tmp_path):
+    """Every engine=None resolution leaves one INFO record on the
+    ``pyspark_engine.streaming`` logger naming the engine and the rule that
+    chose it: a _GEN dir, hard containers, no protobuf, or the default."""
+    import logging
+
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    from pyspark_engine import protoshim
+    from pyspark_engine.streaming import _select_keyed_engine
+
+    schema = StructType(
+        [StructField("k", LongType()), StructField("lord", ArrayType(LongType()))]
+    )
+    gen_dir = tmp_path / "gen"
+    gen_dir.mkdir()
+    (gen_dir / "_GEN").write_text("1 0")
+
+    def decide(state_dir, hard):
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="pyspark_engine.streaming"):
+            engine = _select_keyed_engine("join_tables_streaming", state_dir, hard)
+        (rec,) = [r for r in caplog.records if r.name == "pyspark_engine.streaming"]
+        assert rec.levelno == logging.INFO and rec.engine == engine
+        assert "join_tables_streaming" in rec.getMessage()
+        return engine, rec.rule
+
+    assert decide(None, [(schema, ["k"])]) == ("tws", "default")
+    assert decide(str(gen_dir), [(schema, ["k"])]) == ("exact", "_GEN dir")
+    assert decide(None, [(schema, ["k", "lord"])]) == ("exact", "hard containers")
+    monkeypatch.setattr(protoshim, "ensure_protobuf", lambda *a, **k: False)
+    assert decide(None, [(schema, ["k"])]) == ("exact", "no protobuf")
 
 
 @pytest.mark.slow
@@ -3143,7 +3187,7 @@ def test_compact_emission_log_fk_and_suppress(spark, tmp_path):
             sb.file_stream(ld, key="pk", max_files_per_trigger=1),
             sb.file_stream(rd, key="rk"),
             fk="fk", how="inner", l_order=("lo",), r_order=("ro",),
-            state_dir=st, checkpoint=ck, engine="keyed",
+            state_dir=st, checkpoint=ck, engine="tws",
         )
 
     before = sorted(map(tuple, fk_drain().collect()))
@@ -3172,7 +3216,7 @@ def test_compact_emission_log_fk_and_suppress(spark, tmp_path):
             .suppress(until_time_limit_ms=5 * 60_000)
         )
         return suppress_buffered(
-            tbl, time_col="ts", state_dir=sst, checkpoint=sck, engine="keyed"
+            tbl, time_col="ts", state_dir=sst, checkpoint=sck, engine="tws"
         )
 
     first = {(r["k"], r["__emit_batch"]) for r in sup_drain().collect()}
@@ -3217,7 +3261,7 @@ def test_autocompact_bounds_partitions_across_drains(spark, tmp_path, monkeypatc
             sb.file_stream(ld, key="k", max_files_per_trigger=1),
             sb.file_stream(rd, key="rk", max_files_per_trigger=1),
             how="full", l_order=("lo",), r_order=("ro",),
-            state_dir=st, checkpoint=ck, engine="keyed",
+            state_dir=st, checkpoint=ck, engine="tws",
         )
 
     def parts(name):
@@ -3288,7 +3332,7 @@ def test_compact_emission_log_kind_from_markers_not_columns(spark, tmp_path):
         r_order=("ro",),
         state_dir=st,
         checkpoint=ck,
-        engine="keyed",
+        engine="tws",
     )
     out = os.path.join(st, "out")
     res = compact_emission_log(spark, st, ck, key=("k",))
@@ -3314,10 +3358,7 @@ def test_compact_emission_log_kind_from_markers_not_columns(spark, tmp_path):
     base_id = int(base.split("=", 1)[1])
     assert base_id > 0
     shutil.copytree(os.path.join(out, base), os.path.join(out, "sink_batch=0"))
-    for m in ("_PSE_TTJOIN_V", "_PSE_TWS_TTJOIN_V"):
-        p = os.path.join(st, m)
-        if os.path.exists(p):
-            os.remove(p)
+    os.remove(os.path.join(st, "_PSE_TWS_TTJOIN_V"))
     with pytest.raises(ValueError, match="cannot identify the engine"):
         compact_emission_log(spark, st, ck, key=("k",))
 
@@ -3446,10 +3487,10 @@ def test_state_dir_refuses_mismatched_checkpoint(spark, tmp_path):
         tbl = sb.file_stream(src, key="k", ts="ts").to_table().suppress(until_time_limit_ms=60_000)
         return suppress_buffered(
             tbl, time_col="ts", state_dir=state, checkpoint=ckpt,
-            engine="keyed" if name == "sup_keyed" else "exact",
+            engine="tws" if name == "sup_tws" else "exact",
         )
 
-    loops = ["join_tables", "eager_join", "cogroup", "asof", "sup_keyed", "sup_exact"]
+    loops = ["join_tables", "eager_join", "cogroup", "asof", "sup_tws", "sup_exact"]
     for name in loops:
         state_a, ckpt_a = paths(name, "a")
         state_b, ckpt_b = paths(name, "b")
@@ -3536,7 +3577,7 @@ def test_legacy_unbound_state_adoption_and_commit_guard(spark, tmp_path):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_buffered_resume_differential_fuzz(spark, tmp_path, engine):
     """Cross-DRAIN differential check: the same seeded workloads as the
     single-drain fuzz, but the generations are split across TWO resumed
@@ -3691,12 +3732,11 @@ def test_join_windowed_eager_spurious_outer_timing(spark, tmp_path):
 
 
 def test_keyed_suppress_refuses_foreign_state_schema_version(spark, tmp_path):
-    """r10 review finding: the string tunnel changed the keyed engine's
-    applyInPandasWithState state schema AND the out/ sink schema (v2).  A
-    populated dir stamped with a different version — or a pre-versioning
-    (v1) dir with its stamp absent — must get a descriptive refusal, not
-    Spark's opaque state-schema error mid-drain; the bound pair itself is
-    still recognized (the refusal is about schema, not identity)."""
+    """r10 review finding: a populated per-key (tws) suppress dir stamped
+    with a different engine version — or with its stamp absent — must get
+    a descriptive refusal, not Spark's opaque state-schema error mid-drain;
+    the bound pair itself is still recognized (the refusal is about
+    schema, not identity)."""
     import datetime as dt
     import os as _os
 
@@ -3724,43 +3764,43 @@ def test_keyed_suppress_refuses_foreign_state_schema_version(spark, tmp_path):
         )
 
     got1 = suppress_buffered(
-        mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed"
+        mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws"
     )
     assert sorted(r["k"] for r in got1.collect()) == ["a", "b"]
-    ver = _os.path.join(state, "_PSE_STATE_V")
+    ver = _os.path.join(state, "_PSE_TWS_SUPPRESS_V")
     assert _os.path.exists(ver)  # stamped before the first batch ran
 
-    # simulate a pre-versioning (v1) dir: populated emissions, stamp absent
+    # simulate an unstamped dir: populated emissions, stamp absent
     _os.remove(ver)
-    with _pytest.raises(ValueError, match="state-schema"):
+    with _pytest.raises(ValueError, match="holds tws suppress state with version"):
         suppress_buffered(
-            mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed"
+            mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws"
         )
 
     # a mismatched future version is refused the same way
     with open(ver, "w") as f:
         f.write("99")
-    with _pytest.raises(ValueError, match="state-schema"):
+    with _pytest.raises(ValueError, match="holds tws suppress state with version"):
         suppress_buffered(
-            mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed"
+            mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws"
         )
 
     # restoring the correct stamp resumes cleanly (nothing new to deliver)
     with open(ver, "w") as f:
-        f.write("2")
+        f.write("1")
     got2 = suppress_buffered(
-        mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed"
+        mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws"
     )
     assert got2.collect() == []
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_value_type_matrix(spark, tmp_path, engine):
     """r10 verdict item 5: extend the exact-value round-trip matrix beyond
     bigint — decimal(38,2) and microsecond-precision timestamp VALUE columns
     (including a pre-epoch timestamp VALUE, legal anywhere except the event-
-    time column) ride the same Arrow state path as the tunneled integrals,
-    with real nulls in the same keys' column slices.  Values, nulls, and
+    time column) ride the same value state as the integrals, with real
+    nulls in the same keys' rows.  Values, nulls, and
     dtypes must round-trip exactly through BOTH suppress engines."""
     import datetime as dt
     from decimal import Decimal
@@ -3816,8 +3856,8 @@ def test_stateful_map_decimal_timestamp_state_roundtrip(spark, tmp_path):
     """The raw stateful_map escape hatch: decimal and timestamp values held
     ACROSS microbatches in applyInPandasWithState state come back exactly
     (the caller-visible contract behind the suppress engines' type matrix).
-    Integral columns are the caller's responsibility — the documented Arrow
-    null→float64 coercion is why the suppress engines tunnel them."""
+    Integral columns are the caller's responsibility (Arrow coerces a
+    null-bearing int64 slice to float64)."""
     import datetime as dt
     from decimal import Decimal
 
@@ -3861,10 +3901,11 @@ def test_stateful_map_decimal_timestamp_state_roundtrip(spark, tmp_path):
 
 def test_keyed_suppress_version_gate_fires_on_committed_unemitted_state(spark, tmp_path):
     """r10 advice: suppress can buffer for many batches before its FIRST
-    emission, so a v-old dir may hold committed state with an empty out/.
-    The version gate must fire on committed-state too — gating on emissions
-    alone would stamp the dir v-new and then hit Spark's opaque
-    state-schema failure mid-drain with a permanently wrong stamp."""
+    emission, so a foreign-version dir may hold committed state with an
+    empty out/.  The tws version gate must fire on committed state too —
+    gating on emissions alone would stamp the dir with this version and
+    then hit Spark's opaque state-schema failure mid-drain with a
+    permanently wrong stamp."""
     import datetime as dt
     import os as _os
 
@@ -3890,13 +3931,13 @@ def test_keyed_suppress_version_gate_fires_on_committed_unemitted_state(spark, t
             .suppress(until_time_limit_ms=10**12)  # nothing ever due
         )
 
-    got = suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed")
+    got = suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws")
     assert got.collect() == []  # buffered, no emissions — out/ is empty
-    ver = _os.path.join(state, "_PSE_STATE_V")
+    ver = _os.path.join(state, "_PSE_TWS_SUPPRESS_V")
 
-    # simulate the v1 shape: stamp absent, checkpoint committed, out/ empty
+    # simulate an unstamped dir: checkpoint committed, out/ empty
     _os.remove(ver)
-    with _pytest.raises(ValueError, match="state-schema"):
-        suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed")
+    with _pytest.raises(ValueError, match="holds tws suppress state with version"):
+        suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws")
     # the refusal must NOT have restamped the dir (it is not verifiably fresh)
     assert not _os.path.exists(ver)

@@ -1,19 +1,18 @@
 """transformWithState engine family + the vendored minimal protobuf runtime.
 
-The live engine behavior (parity with keyed/exact, crash-replay, resume,
+The live engine behavior (parity with exact, crash-replay, resume,
 type matrix) is covered by the engine-parametrized suites in
 test_streaming.py; this file pins what is UNIQUE to the tws path:
 
 * the clean-room ``vendor/google/protobuf`` runtime's wire format, against
   hand-computed byte vectors (the live peer is the JVM protobuf runtime,
   so any divergence the vectors miss would also fail the live suites);
-* engine guards: tws state dirs refuse the pandas/exact engines and vice
-  versa;
+* engine guards: tws state dirs refuse the exact engine and the removed
+  pandas keyed engine, and vice versa;
 * the container-column refusal (PySpark's value-state client scrambles
   nested containers — upstream, observed on 4.1.2);
-* NaN semantics: tws and exact PRESERVE float NaN where the pandas keyed
-  engines coerce it to null (documented at _clean_state_value; this is the
-  r11-advice pin).
+* NaN semantics: tws and exact both PRESERVE float NaN (the r11-advice
+  pin).
 """
 
 from __future__ import annotations
@@ -189,7 +188,9 @@ def _mk_stream(spark, tmp_path, name, schema, rows, key, ts=None):
 
 def test_tws_state_dir_refused_by_keyed_engine_and_vice_versa(spark, tmp_path):
     """A dir stamped by one engine family must be refused descriptively by
-    the other (fabricated markers — no drain needed)."""
+    the other (fabricated markers — no drain needed).  The pandas keyed
+    engine is removed: its dirs are refused by tws, and asking for it on a
+    tws dir names the removal."""
     import os
 
     from pyspark_engine.streaming import join_tables_streaming
@@ -204,7 +205,7 @@ def test_tws_state_dir_refused_by_keyed_engine_and_vice_versa(spark, tmp_path):
     keyed_dir = tmp_path / "keyed_dir"
     keyed_dir.mkdir()
     (keyed_dir / "_PSE_TTJOIN_V").write_text("1")
-    with pytest.raises(ValueError, match="pandas keyed tt-join"):
+    with pytest.raises(ValueError, match="pandas keyed engine, which was removed"):
         join_tables_streaming(l1, r1, engine="tws", state_dir=str(keyed_dir))
 
     # fabricate an exact ping-pong dir → tws must refuse
@@ -214,18 +215,20 @@ def test_tws_state_dir_refused_by_keyed_engine_and_vice_versa(spark, tmp_path):
     with pytest.raises(ValueError, match="exact ping-pong"):
         join_tables_streaming(l1, r1, engine="tws", state_dir=str(exact_dir))
 
-    # fabricate a tws dir WITH emissions → the pandas keyed engine must
-    # refuse descriptively (the bind gate fires first on a fabricated dir;
-    # on a real one whose bind matches, the version gate fires — either way
-    # the populated foreign dir never drains under the wrong engine)
+    # fabricate a tws dir WITH emissions → the removed keyed engine is
+    # refused by name, and the exact loop refuses the foreign layout
     tws_dir = tmp_path / "tws_dir"
     (tws_dir / "out" / "sink_batch=0").mkdir(parents=True)
     (tws_dir / "out" / "sink_batch=0" / "part-0.parquet").write_bytes(b"")
     (tws_dir / "_PSE_TWS_TTJOIN_V").write_text("1")
     os.makedirs(tws_dir / "ck")
-    with pytest.raises(ValueError, match="state dir"):
+    with pytest.raises(ValueError, match="pandas keyed engine was removed"):
         join_tables_streaming(
             l1, r1, engine="keyed", state_dir=str(tws_dir), checkpoint=str(tws_dir / "ck")
+        )
+    with pytest.raises(ValueError, match="readable _GEN marker"):
+        join_tables_streaming(
+            l1, r1, engine="exact", state_dir=str(tws_dir), checkpoint=str(tws_dir / "ck")
         )
 
 
@@ -343,9 +346,7 @@ def test_tws_pins_session_timezone_utc_for_drain(spark, tmp_path):
 
 def test_nan_double_semantics_across_join_engines(spark, tmp_path):
     """r11 advice pin: a genuine float NaN in a double value column is
-    PRESERVED by the exact loop and the tws engine, and coerced to null by
-    the pandas keyed engine (Arrow float64 slices cannot distinguish NaN
-    from union null-padding — documented at _clean_state_value)."""
+    PRESERVED by both the exact loop and the tws engine."""
     from pyspark_engine.streaming import join_tables_streaming
 
     l1 = _mk_stream(
@@ -363,8 +364,6 @@ def test_nan_double_semantics_across_join_engines(spark, tmp_path):
     assert math.isnan(exact[1]) and exact[2] == 2.5
     tws = run("tws")
     assert math.isnan(tws[1]) and tws[2] == 2.5
-    keyed = run("keyed")
-    assert keyed[1] is None and keyed[2] == 2.5
 
 
 @pytest.mark.xfail(
