@@ -125,6 +125,14 @@ def _read_gen(root: str) -> int:
         return 0
 
 
+def _atomic_write(path: str, text: str) -> None:
+    """Write a marker file through ``<path>.tmp`` and a rename, so a crash
+    leaves the old content or the new one, never a torn file."""
+    with open(path + ".tmp", "w") as f:
+        f.write(text)
+    os.replace(path + ".tmp", path)
+
+
 def _write_gen(root: str, n: int, applied_batch: int | None = None) -> None:
     """Atomically persist the generation counter next to the state dirs
     (write-then-rename, so a crash mid-write leaves the previous value).
@@ -135,10 +143,10 @@ def _write_gen(root: str, n: int, applied_batch: int | None = None) -> None:
     and without the marker the replay would read the post-batch generation
     as its input snapshot and fold the batch a second time (for the
     suppress buffer: re-buffer and later re-emit already-emitted keys)."""
-    tmp = os.path.join(root, "_GEN.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(int(n)) if applied_batch is None else f"{int(n)} {int(applied_batch)}")
-    os.replace(tmp, os.path.join(root, "_GEN"))
+    _atomic_write(
+        os.path.join(root, "_GEN"),
+        str(int(n)) if applied_batch is None else f"{int(n)} {int(applied_batch)}",
+    )
 
 
 def _read_applied(root: str) -> int:
@@ -180,19 +188,9 @@ def _max_sink_batch(root: str) -> int:
     engines, as-of join), which keep no _GEN.  Used to cross-check legacy
     adoption: an emission cannot postdate its own checkpoint's commits by
     more than the one crash-replayed batch."""
-    best = -1
-    for d in (root, os.path.join(root, "out")):
-        try:
-            entries = os.listdir(d)
-        except OSError:
-            continue
-        for e in entries:
-            if e.startswith("sink_batch="):
-                try:
-                    best = max(best, int(e.split("=", 1)[1]))
-                except ValueError:
-                    pass
-    return best
+    return max(
+        [*_sink_partitions(root), *_sink_partitions(os.path.join(root, "out"))], default=-1
+    )
 
 
 def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> str:
@@ -302,10 +300,7 @@ def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> 
     # bound state dir, which re-binds on the next attempt (the reverse order
     # would leave a bound checkpoint that refuses its own retry)
     for p in (s_path, c_path):
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(token)
-        os.replace(tmp, p)
+        _atomic_write(p, token)
     return ckpt
 
 
@@ -341,7 +336,14 @@ def _check_no_pending_compaction(root: str) -> None:
             )
 
 
+def _sink_path(out_dir: str, batch_id: int) -> str:
+    """The emission-log partition of one microbatch."""
+    return os.path.join(out_dir, f"sink_batch={batch_id}")
+
+
 def _sink_partitions(out_dir: str) -> dict[int, str]:
+    """The emission log's ``sink_batch=<id>`` partitions, {id: path} — the
+    one parser of the partition names (an absent dir has none)."""
     parts = {}
     try:
         for e in os.listdir(out_dir):
@@ -353,6 +355,77 @@ def _sink_partitions(out_dir: str) -> dict[int, str]:
     except OSError:
         pass
     return parts
+
+
+def _drain_emission_log(df: DataFrame, ckpt: str, out_dir: str, project=None) -> None:
+    """Drain ``df`` with one availableNow foreachBatch query into the
+    emission log at ``out_dir``: each non-empty microbatch — passed through
+    ``project(batch, batch_id)`` when given — OVERWRITES its own
+    ``sink_batch=<id>`` partition, so a crash-replayed batch rewrites itself
+    instead of appending duplicates (Structured Streaming's idempotent
+    per-batch-id sink).  Every tws drain and the exact as-of join emit
+    through here."""
+
+    def _sink(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        out = batch if project is None else project(batch, batch_id)
+        out.write.mode("overwrite").parquet(_sink_path(out_dir, batch_id))
+
+    q = (
+        df.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def _drain_ping_pong(
+    df: DataFrame,
+    root: str,
+    checkpoint: str | None,
+    what: str,
+    fold: Callable[[DataFrame, int, int, int], None],
+    output_mode: str = "append",
+) -> tuple[int, int]:
+    """Drain ``df`` with one availableNow foreachBatch query over the
+    parquet ping-pong generations in ``root`` — the _GEN applied-batch
+    contract shared by the exact loops.  The generation survives restarts
+    in the _GEN marker, and ``root`` is bound to its one checkpoint (a
+    fresh or foreign checkpoint renumbers or skips batch ids, so the
+    replay-skip would silently drop or double-fold data).  Each new
+    microbatch runs ``fold(batch, batch_id, cur, nxt)``, which reads
+    generation slot ``cur`` and writes slot ``nxt``; _write_gen then
+    commits the new generation and the batch id in one atomic write.  A
+    crash-replayed batch whose fold already committed is skipped, but its
+    tasks still run (noop sink) so upstream stateful operators commit their
+    stores for it.  Returns (final generation, last batch the checkpoint
+    had committed before this drain)."""
+    gen = _read_gen(root)
+    ckpt = _bind_state_checkpoint(
+        root, _checkpoint(checkpoint), gen > 0, f"{what} generation {gen}"
+    )
+    prior_batch = _last_committed(ckpt)
+
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        nonlocal gen
+        if batch_id <= _read_applied(root):
+            batch.write.format("noop").mode("overwrite").save()
+            return
+        fold(batch, batch_id, gen % 2, (gen + 1) % 2)
+        gen += 1
+        _write_gen(root, gen, batch_id)
+
+    q = (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(_apply)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return gen, prior_batch
 
 
 # every engine stamps exactly one of these at the state-dir root before its
@@ -404,9 +477,6 @@ def _recover_compaction(out_dir: str, root: str) -> None:
         if e.startswith(_COMPACT_TRASH_PREFIX):
             trash_ids[int(e[len(_COMPACT_TRASH_PREFIX) :])] = os.path.join(root, e)
 
-    def dest_of(n: int) -> str:
-        return os.path.join(out_dir, f"sink_batch={n}")
-
     def prune_below(n: int) -> None:
         for k, p in _sink_partitions(out_dir).items():
             if k < n:
@@ -424,11 +494,11 @@ def _recover_compaction(out_dir: str, root: str) -> None:
                 # point provably precedes the dest→trash swap — roll back
                 # (drop the fold, out/ is intact, prune nothing)
                 shutil.rmtree(tmp)
-            elif not os.path.isdir(dest_of(n)):
+            elif not os.path.isdir(_sink_path(out_dir, n)):
                 # crashed between dest→trash and the install: the fold is
                 # complete and the old base is in trash — finish forward
                 os.remove(target_path)
-                os.rename(tmp, dest_of(n))
+                os.rename(tmp, _sink_path(out_dir, n))
                 if n in trash_ids:
                     shutil.rmtree(trash_ids.pop(n), ignore_errors=True)
                 prune_below(n)
@@ -444,19 +514,34 @@ def _recover_compaction(out_dir: str, root: str) -> None:
             # both roll back; restore the old base first if it was
             # displaced
             for n, p in list(trash_ids.items()):
-                if not os.path.isdir(dest_of(n)):
-                    os.rename(p, dest_of(n))
+                if not os.path.isdir(_sink_path(out_dir, n)):
+                    os.rename(p, _sink_path(out_dir, n))
                     trash_ids.pop(n)
             shutil.rmtree(tmp)
     for n, p in trash_ids.items():
-        if os.path.isdir(dest_of(n)):
+        if os.path.isdir(_sink_path(out_dir, n)):
             # dest present with trash left over ⇒ install completed and the
             # crash hit during cleanup — finish forward
             shutil.rmtree(p, ignore_errors=True)
             prune_below(n)
         else:
             # trash without dest and without a fold: restore the old base
-            os.rename(p, dest_of(n))
+            os.rename(p, _sink_path(out_dir, n))
+
+
+def _fold_emission_log(log: DataFrame, key: Sequence[str], fk: bool) -> DataFrame:
+    """Latest-per-key fold of a join emission log: each key's row from its
+    newest ``sink_batch``.  An fk log keeps its ``op`` column and breaks
+    same-batch ties U over D, so a flip's retraction never outlives its
+    re-subscription."""
+    if not fk:
+        return KStream(log, tuple(key), None).to_table(order=("sink_batch",)).df
+    ranked = log.withColumn("__op_rank", (F.col("op") == "U").cast("int"))
+    return (
+        KStream(ranked, tuple(key), None)
+        .to_table(order=("sink_batch", "__op_rank"))
+        .df.drop("__op_rank")
+    )
 
 
 def compact_emission_log(
@@ -582,28 +667,16 @@ def compact_emission_log(
         raise ValueError("compact_emission_log needs the fold key columns for join logs")
     base_id = max(foldable)
     kept = spark.read.parquet(out_dir).filter(F.col("sink_batch") <= F.lit(int(committed)))
-    if kind == "fk":
-        ranked = kept.withColumn("__op_rank", (F.col("op") == "U").cast("int"))
-        base = (
-            KStream(ranked, tuple(key), None)
-            .to_table(order=("sink_batch", "__op_rank"))
-            .df.drop("__op_rank", "sink_batch")
-        )
-    else:
-        base = KStream(kept, tuple(key), None).to_table(order=("sink_batch",)).df.drop(
-            "sink_batch"
-        )
+    base = _fold_emission_log(kept, key, kind == "fk").drop("sink_batch")
     tmp = os.path.join(root, _COMPACT_TMP)
     shutil.rmtree(tmp, ignore_errors=True)
     base.write.mode("overwrite").parquet(tmp)
     result["base_rows"] = spark.read.parquet(tmp).count()
     # tmp+replace so a crash can never leave a torn marker (a torn _TARGET
     # used to wedge _recover_compaction's int() parse on every attempt)
-    target = os.path.join(tmp, "_TARGET")
-    with open(target + ".tmp", "w") as f:
-        f.write(str(base_id))
-    os.replace(target + ".tmp", target)  # tmp is now complete: recovery installs it
-    dest = os.path.join(out_dir, f"sink_batch={base_id}")
+    # after this write tmp is complete: recovery installs it
+    _atomic_write(os.path.join(tmp, "_TARGET"), str(base_id))
+    dest = _sink_path(out_dir, base_id)
     trash = os.path.join(root, f"{_COMPACT_TRASH_PREFIX}{base_id}")
     os.rename(dest, trash)
     os.remove(os.path.join(tmp, "_TARGET"))
@@ -636,7 +709,9 @@ def _container_cols(schema, cols) -> set[str]:
     }
 
 
-_AUTOCOMPACT_DEFAULT = 32
+# committed emission-log partitions that trigger a compaction at drain
+# entry; read at call time, so stress tooling and tests can lower it
+_AUTOCOMPACT_EVERY = 32
 
 
 def _maybe_autocompact(spark: SparkSession, state_dir: str, checkpoint: str, key=()) -> None:
@@ -645,25 +720,27 @@ def _maybe_autocompact(spark: SparkSession, state_dir: str, checkpoint: str, key
     query starts.  Entry-time (never post-drain) because the returned
     snapshot/emissions are LAZY reads over ``out/sink_batch=*``; a
     post-drain compaction would prune partitions the caller is about to
-    scan.  When the committed partition count reaches ``PSE_COMPACT_EVERY``
-    (default 32; <= 0 disables), the log folds into one base partition,
+    scan.  When the committed partition count reaches
+    ``_AUTOCOMPACT_EVERY``, the log folds into one base partition,
     bounding snapshot reconstruction at O(tail) instead of O(total
-    emissions ever) across long-lived resumed drains (r11 advice).  A crash
-    mid-compaction is covered by the existing recovery:
-    _check_no_pending_compaction refuses the drain and the next
-    compact_emission_log call finishes or rolls back the pass."""
-    try:
-        every = int(os.environ.get("PSE_COMPACT_EVERY", str(_AUTOCOMPACT_DEFAULT)))
-    except ValueError:
-        every = _AUTOCOMPACT_DEFAULT
-    if every <= 0:
-        return
+    emissions ever) across long-lived resumed drains (r11 advice), and one
+    INFO record on ``pyspark_engine.streaming`` carries the compaction's
+    ``kind``/``folded``/``pruned``/``committed``.  A crash mid-compaction
+    is covered by the existing recovery: _check_no_pending_compaction
+    heals it at the next drain entry."""
     is_fk = os.path.isdir(os.path.join(state_dir, "sub"))
     out_dir = os.path.join(state_dir, "out")
     ck = os.path.join(checkpoint, "join") if is_fk else checkpoint
     committed = _last_committed(ck)
-    if sum(1 for k in _sink_partitions(out_dir) if k <= committed) >= every:
-        compact_emission_log(spark, state_dir, checkpoint, key=tuple(key))
+    if sum(1 for k in _sink_partitions(out_dir) if k <= committed) < _AUTOCOMPACT_EVERY:
+        return
+    res = compact_emission_log(spark, state_dir, checkpoint, key=tuple(key))
+    rec = {k: res.get(k) for k in ("kind", "folded", "pruned", "committed")}
+    _log.info(
+        "autocompacted %s emission log %r: folded %s, pruned %s, committed batch %s",
+        rec["kind"], state_dir, rec["folded"], rec["pruned"], rec["committed"],
+        extra=rec,
+    )
 
 
 # version markers of the pandas ``applyInPandasWithState`` tt-join, fk-join
@@ -918,7 +995,9 @@ def run_available_now(obj, name: str | None = None, output_mode: str = "append")
     State/shuffle partitions for the drain are sized from the source bytes
     (see _DRAIN_TARGET_BYTES) — safe here because every drain starts a FRESH
     checkpoint (a restarted checkpoint pins its original partition count);
-    the session value is restored afterwards.
+    the session value is restored afterwards.  The sizing is logged as one
+    INFO record on ``pyspark_engine.streaming`` with ``source_bytes``,
+    ``partitions`` and ``session_partitions`` attributes.
     """
     df = obj.df if hasattr(obj, "df") else obj
     _check_emit_final(obj, df, output_mode)
@@ -930,6 +1009,15 @@ def run_available_now(obj, name: str | None = None, output_mode: str = "append")
         want = max(1, min(int(saved), -(-src_bytes // _DRAIN_TARGET_BYTES)))
         if want < int(saved):
             spark.conf.set("spark.sql.shuffle.partitions", str(want))
+        _log.info(
+            "run_available_now: %d source bytes -> %d state partitions (session %s)",
+            src_bytes, want, saved,
+            extra={
+                "source_bytes": src_bytes,
+                "partitions": want,
+                "session_partitions": int(saved),
+            },
+        )
     try:
         q = (
             df.writeStream.format("memory")
@@ -1354,6 +1442,26 @@ def _check_reserved_columns(cols, reserved: dict[str, str], what: str) -> None:
         )
 
 
+def _changelog_orders(
+    left: KStream,
+    right: KStream,
+    l_order: Sequence[str] | None,
+    r_order: Sequence[str] | None,
+) -> tuple[tuple, tuple]:
+    """Each side's changelog order — the declared columns, else the side's
+    ts — shared by every table⋈table engine; raises when a side has none
+    or names a column it lacks."""
+    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
+    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
+    if not lord or not rord:
+        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
+    for oc, cols in ((lord, left.df.columns), (rord, right.df.columns)):
+        missing = [c for c in oc if c not in cols]
+        if missing:
+            raise ValueError(f"order columns {missing} not in the side's columns")
+    return lord, rord
+
+
 def _changelog_join_loop(
     left: KStream,
     right: KStream,
@@ -1380,12 +1488,8 @@ def _changelog_join_loop(
         "changelog-state join loop",
     )
     l_cols, r_cols = list(left.df.columns), list(right.df.columns)
-    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
-    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
-    if not lord or not rord:
-        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
+    lord, rord = _changelog_orders(left, right, l_order, r_order)
     root = state_dir or tempfile.mkdtemp(prefix=state_prefix)
-    os.makedirs(root, exist_ok=True)
     tagged = left.df.select(
         F.lit(1).alias("__side"),
         *l_cols,
@@ -1397,23 +1501,9 @@ def _changelog_join_loop(
             *r_cols,
         )
     )
-    gen = {"n": _read_gen(root)}  # survives a restart on the same checkpoint
-    # a fresh OR foreign checkpoint renumbers/skips batch ids, so the
-    # replay-skip below would silently drop or double-fold data — the state
-    # dir is bound to its original checkpoint and every other pair refused
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), gen["n"] > 0, f"join-state generation {gen['n']}"
-    )
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= _read_applied(root):
-            # crash-replay of a batch whose fold already committed: skip the
-            # fold, but still run the batch's tasks (noop sink) so the
-            # upstream stateful operator's stores commit for this batch
-            batch.write.format("noop").mode("overwrite").save()
-            return
+    def _fold(batch: DataFrame, batch_id: int, cur: int, nxt: int) -> None:
         spark = batch.sparkSession
-        cur, nxt = gen["n"] % 2, (gen["n"] + 1) % 2
         sides = (
             ("l", F.col("__side") == 1, l_cols, left.key, lord),
             ("r", F.col("__side") == 0, r_cols, right.key, rord),
@@ -1429,16 +1519,8 @@ def _changelog_join_loop(
         r_t = KTable(spark.read.parquet(os.path.join(root, f"r-{nxt}")), right.key, right.ts)
         out = combine(l_t, r_t)
         out.df.write.mode("overwrite").parquet(os.path.join(root, "out"))
-        gen["n"] += 1
-        _write_gen(root, gen["n"], batch_id)
 
-    q = (
-        tagged.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_ping_pong(tagged, root, checkpoint, "join-state", _fold)
     spark = left.df.sparkSession
     out_path = os.path.join(root, "out")
     if not os.path.exists(out_path):
@@ -1591,21 +1673,7 @@ def suppress_buffered(
 
     cols = list(df.columns)
     root = state_dir or tempfile.mkdtemp(prefix="pse-suppress-")
-    os.makedirs(root, exist_ok=True)
-    gen = {"n": _read_gen(root)}
-    spark0 = df.sparkSession
     out_dir = os.path.join(root, "out")
-    # resuming the buffer with a fresh OR foreign checkpoint would replay
-    # the whole source and re-merge already-emitted keys (double emission),
-    # or skip foreign batch ids — only the bound original pair is accepted
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), gen["n"] > 0, f"suppress-buffer generation {gen['n']}"
-    )
-    # this CALL returns only ITS OWN emissions: a resumed drain must not
-    # re-deliver records from batches the checkpoint already COMMITTED
-    # (an emitted-but-uncommitted batch replays and IS delivered — the
-    # previous drain crashed before returning it)
-    prior_batch = _last_committed(ckpt)
 
     def _stream_time() -> int:
         try:
@@ -1614,17 +1682,10 @@ def suppress_buffered(
         except (OSError, ValueError):
             return -(1 << 62)
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
+    def _fold(batch: DataFrame, batch_id: int, cur: int, nxt: int) -> None:
         from pyspark.sql.window import Window
 
-        if batch_id <= _read_applied(root):
-            # crash-replay of a batch whose fold already committed: skip the
-            # fold (the emission partition is already on disk), but still
-            # run the batch's tasks so the upstream aggregate's stores commit
-            batch.write.format("noop").mode("overwrite").save()
-            return
         spark = batch.sparkSession
-        cur, nxt = gen["n"] % 2, (gen["n"] + 1) % 2
         new = batch.withColumn("__ev_ms", epoch_ms(tcol))
         batch_max = new.agg(F.max("__ev_ms")).collect()[0][0]
         st = max(_stream_time(), batch_max if batch_max is not None else -(1 << 62))
@@ -1696,57 +1757,52 @@ def suppress_buffered(
                 out = part if out is None else out.unionByName(part)
             # one OVERWRITE per batch partition: a crash-replayed batch
             # rewrites its own emissions instead of appending duplicates
-            out.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"sink_batch={batch_id}")
-            )
+            out.write.mode("overwrite").parquet(_sink_path(out_dir, batch_id))
         remaining.write.mode("overwrite").parquet(os.path.join(root, f"buf-{nxt}"))
-        tmp = os.path.join(root, "_STREAM_TIME.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(int(st)))
-        os.replace(tmp, os.path.join(root, "_STREAM_TIME"))
-        gen["n"] += 1
-        _write_gen(root, gen["n"], batch_id)
+        _atomic_write(os.path.join(root, "_STREAM_TIME"), str(int(st)))
 
-    q = (
-        df.writeStream.outputMode("update")
-        .foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    # resuming the buffer with a fresh OR foreign checkpoint would replay
+    # the whole source and re-merge already-emitted keys (double emission),
+    # or skip foreign batch ids — the ping-pong drain refuses it.  This CALL
+    # returns only ITS OWN emissions: a resumed drain must not re-deliver
+    # records from batches the checkpoint already COMMITTED (an
+    # emitted-but-uncommitted batch replays and IS delivered — the previous
+    # drain crashed before returning it)
+    n, prior_batch = _drain_ping_pong(
+        df, root, checkpoint, "suppress-buffer", _fold, output_mode="update"
     )
-    q.awaitTermination()
     spark = df.sparkSession
     if store_name is not None:
-        buf_path = os.path.join(root, f"buf-{gen['n'] % 2}")
+        buf_path = os.path.join(root, f"buf-{n % 2}")
         buf = (
             spark.read.parquet(buf_path)
             if os.path.exists(buf_path)
             else spark.createDataFrame([], df.schema)
         )
         buf.createOrReplaceTempView(store_name)
+    return _emissions_since(spark, out_dir, prior_batch, df.schema, cols)
+
+
+def _has_emissions(out_dir: str) -> bool:
+    """Whether an emission log holds any ``sink_batch=<id>`` partition (a
+    bare or absent dir means no microbatch ever emitted)."""
+    return bool(_sink_partitions(out_dir))
+
+
+def _emissions_since(spark, out_dir: str, prior_batch: int, schema, cols) -> DataFrame:
+    """A suppress drain's result: the emissions of batches after
+    ``prior_batch`` (the checkpoint's last commit before the drain), or an
+    empty frame of the same shape when the log holds none."""
     if not _has_emissions(out_dir):
-        return _empty_emissions(spark, df.schema, cols)
+        return spark.createDataFrame([], schema).select(
+            *cols,
+            F.lit(None).cast("string").alias("__emit_reason"),
+            F.lit(None).cast("long").alias("__emit_batch"),
+        )
     return (
         spark.read.parquet(out_dir)
         .filter(F.col("sink_batch") > F.lit(int(prior_batch)))
         .select(*cols, "__emit_reason", "__emit_batch")
-    )
-
-
-def _has_emissions(out_dir: str) -> bool:
-    """Whether the suppress out/ directory holds any sink_batch=* partition
-    (a bare or absent dir means no microbatch ever emitted)."""
-    if not os.path.isdir(out_dir):
-        return False
-    return any(e.startswith("sink_batch=") for e in os.listdir(out_dir))
-
-
-def _empty_emissions(spark, schema, cols):
-    empty = spark.createDataFrame([], schema)
-    return empty.select(
-        *cols,
-        F.lit(None).cast("string").alias("__emit_reason"),
-        F.lit(None).cast("long").alias("__emit_batch"),
     )
 
 
@@ -1977,13 +2033,7 @@ def join_windowed_eager(
         raise ValueError("eager windowed join supports inner|left|full")
     l_cols, r_cols = list(left.df.columns), list(right.df.columns)
     root = state_dir or tempfile.mkdtemp(prefix="pse-ssjoin-")
-    os.makedirs(root, exist_ok=True)
     out_dir = os.path.join(root, "out")
-    gen = {"n": _read_gen(root)}
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), gen["n"] > 0, f"eager-join generation {gen['n']}"
-    )
-    prior_batch = _last_committed(ckpt)
     tagged = left.df.select(
         F.lit(1).alias("__side"),
         *l_cols,
@@ -2001,12 +2051,8 @@ def join_windowed_eager(
             KStream(rdf, right.key, right.ts), window, how=how, ts_alias=ts_alias
         ).df
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= _read_applied(root):
-            batch.write.format("noop").mode("overwrite").save()
-            return
+    def _fold(batch: DataFrame, batch_id: int, cur: int, nxt: int) -> None:
         spark = batch.sparkSession
-        cur, nxt = gen["n"] % 2, (gen["n"] + 1) % 2
         sides = {}
         for tag, pred, cols in (
             ("l", F.col("__side") == 1, l_cols),
@@ -2029,17 +2075,9 @@ def join_windowed_eager(
         # eager emission set = what the full eager history would have added
         # this batch: new matches + new unmatched-side paddings, no retraction
         delta = _join(all_l, all_r).exceptAll(_join(old_l, old_r))
-        delta.write.mode("overwrite").parquet(os.path.join(out_dir, f"sink_batch={batch_id}"))
-        gen["n"] += 1
-        _write_gen(root, gen["n"], batch_id)
+        delta.write.mode("overwrite").parquet(_sink_path(out_dir, batch_id))
 
-    q = (
-        tagged.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _, prior_batch = _drain_ping_pong(tagged, root, checkpoint, "eager-join", _fold)
     spark = left.df.sparkSession
     if not _has_emissions(out_dir):
         empty_l = spark.createDataFrame([], left.df.schema)
@@ -2049,13 +2087,67 @@ def join_windowed_eager(
     return got.filter(F.col("sink_batch") > F.lit(int(prior_batch))).drop("sink_batch")
 
 
+def _asof_tws_unmet(stream: KStream, table, matched_ts: str) -> tuple[str, str] | None:
+    """The first construction guard of the tws as-of engine these inputs
+    fail, as ``(rule, error text)``, or None when tws can run them: both
+    ts columns timestamp-typed, equal key arity, no reserved-name
+    collisions, equal key dtypes.  The tws engine raises the error text;
+    engine=None logs the rule and selects exact instead."""
+    s_types, t_types = dict(stream.df.dtypes), dict(table.df.dtypes)
+    if stream.ts is None or getattr(table, "ts", None) is None:
+        return "timestamp ts", "as-of join requires ts on both sides"
+    if len(stream.key) != len(table.key):
+        return "key arity", "join key arity mismatch"
+    s_ts, t_ts = s_types.get(stream.ts), t_types.get(table.ts)
+    if s_ts != "timestamp" or t_ts != "timestamp":
+        return "timestamp ts", (
+            "the tws as-of engine requires timestamp ts columns on both sides "
+            f"({stream.ts}:{s_ts}, {table.ts}:{t_ts}) — use engine='exact'"
+        )
+    try:
+        _check_reserved_columns(
+            list(stream.df.columns) + list(table.df.columns) + [matched_ts],
+            {
+                "sink_batch": "emission-log partition column",
+                "__side": "history/stream union tag",
+                "__sts": "stream event-time projection",
+                "__hts": "version event-time projection",
+                **{f"__jk{i}": "join-key grouping column" for i in range(len(stream.key))},
+            },
+            "tws as-of engine",
+        )
+    except ValueError as e:
+        return "reserved names", str(e)
+    for lk, rk in zip(stream.key, table.key):
+        if s_types.get(lk) != t_types.get(rk):
+            return "key dtypes", (
+                f"the tws as-of engine requires equal key dtypes across sides; "
+                f"{lk}:{s_types.get(lk)} vs {rk}:{t_types.get(rk)} — cast one side or "
+                "use engine='exact'"
+            )
+    return None
+
+
+def _asof_result(stream: KStream, table, how, tolerance_ms, matched_ts, log_dir: str) -> DataFrame:
+    """An as-of drain's accumulated result: every row of the emission log
+    at ``log_dir``, or — when no microbatch emitted (empty stream) — the
+    schema-correct empty batch join."""
+    spark = stream.df.sparkSession
+    if not _has_emissions(log_dir):
+        empty = KStream(spark.createDataFrame([], stream.df.schema), stream.key, stream.ts)
+        return empty.join_table_asof(
+            table, how=how, tolerance_ms=tolerance_ms, matched_ts=matched_ts
+        ).df
+    return spark.read.parquet(log_dir).drop("sink_batch")
+
+
 def _select_asof_engine(stream: KStream, table, matched_ts: str, out_dir: str | None) -> str:
     """engine=None auto-selection for the as-of join: resume with the
     engine that wrote ``out_dir``; otherwise tws when it can run and every
-    tws construction guard passes (timestamp ts, key arity AND dtype
-    equality, no hard containers, no reserved-name collisions — a bare
-    default flip would break previously working exact calls), else exact.
-    Logs the decision like _select_keyed_engine."""
+    tws construction guard passes (_asof_tws_unmet, plus no hard
+    containers — a bare default flip would break previously working exact
+    calls), else exact.  Logs the decision like _select_keyed_engine, with
+    the failing guard as the rule."""
     from .protoshim import ensure_protobuf  # noqa: PLC0415
 
     what = "join_table_asof_streaming"
@@ -2075,22 +2167,9 @@ def _select_asof_engine(stream: KStream, table, matched_ts: str, out_dir: str | 
         return _engine_decision(what, "exact", "hard containers")
     if not ensure_protobuf():
         return _engine_decision(what, "exact", "no protobuf")
-    s_types = dict(stream.df.dtypes)
-    t_types = dict(table.df.dtypes)
-    reserved = {"sink_batch", "__side", "__sts", "__hts"} | {
-        f"__jk{i}" for i in range(len(stream.key))
-    }
-    tws_ok = (
-        stream.ts is not None
-        and getattr(table, "ts", None) is not None
-        and s_types.get(stream.ts) == "timestamp"
-        and t_types.get(table.ts) == "timestamp"
-        and len(stream.key) == len(table.key)
-        and all(s_types.get(lk) == t_types.get(rk) for lk, rk in zip(stream.key, table.key))
-        and not reserved & (set(stream.df.columns) | set(table.df.columns) | {matched_ts})
-    )
-    if not tws_ok:
-        return _engine_decision(what, "exact", "tws guards unmet")
+    unmet = _asof_tws_unmet(stream, table, matched_ts)
+    if unmet is not None:
+        return _engine_decision(what, "exact", unmet[0])
     return _engine_decision(what, "tws", "default")
 
 
@@ -2156,30 +2235,13 @@ def join_table_asof_streaming(
         root, _checkpoint(checkpoint), _has_emissions(root), "prior as-of join output"
     )
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        ks = KStream(batch, stream.key, stream.ts)
-        out = ks.join_table_asof(
-            table, how=how, tolerance_ms=tolerance_ms, matched_ts=matched_ts
-        )
-        out.df.write.mode("overwrite").parquet(os.path.join(root, f"sink_batch={batch_id}"))
-
-    q = (
-        stream.df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark = stream.df.sparkSession
-    if not _has_emissions(root):
-        # no microbatch fired (empty stream): schema-correct empty result
-        empty = KStream(
-            spark.createDataFrame([], stream.df.schema), stream.key, stream.ts
-        )
-        return empty.join_table_asof(
+    def _join(batch: DataFrame, _batch_id: int) -> DataFrame:
+        return KStream(batch, stream.key, stream.ts).join_table_asof(
             table, how=how, tolerance_ms=tolerance_ms, matched_ts=matched_ts
         ).df
-    return spark.read.parquet(root).drop("sink_batch")
+
+    _drain_emission_log(stream.df, ckpt, root, project=_join)
+    return _asof_result(stream, table, how, tolerance_ms, matched_ts, root)
 
 
 def cogroup_streaming(
@@ -2237,41 +2299,25 @@ def cogroup_streaming(
             )
         agg_df = df.groupBy(*grouped.key).agg(*[v.alias(k) for k, v in aggs.items()])
         side_root = os.path.join(root, f"side-{i}")
-        os.makedirs(side_root, exist_ok=True)
-        gen = {"n": _read_gen(side_root)}  # survives a restart on the same checkpoint
-        side_ckpt = _bind_state_checkpoint(
-            side_root,
-            _checkpoint(None if checkpoint is None else os.path.join(checkpoint, f"side-{i}")),
-            gen["n"] > 0,
-            f"cogroup-state generation {gen['n']}",
-        )
+        side_ckpt = None if checkpoint is None else os.path.join(checkpoint, f"side-{i}")
 
-        def _apply(batch: DataFrame, batch_id: int, side_root=side_root, gen=gen, kcols=tuple(grouped.key)):
-            if batch_id <= _read_applied(side_root):
-                batch.write.format("noop").mode("overwrite").save()
-                return  # crash-replay of a batch whose fold already committed
+        def _fold(batch, batch_id, cur, nxt, side_root=side_root, kcols=tuple(grouped.key)):
             spark = batch.sparkSession
-            cur, nxt = gen["n"] % 2, (gen["n"] + 1) % 2
-            rows = batch.withColumn("__gen", F.lit(gen["n"] + 1).cast("long"))
+            # batch_id + 1 exceeds every stored __gen (a fold's generation
+            # is at most its batch id + 1), so the batch's rows win the fold
+            rows = batch.withColumn("__gen", F.lit(batch_id + 1).cast("long"))
             prev = os.path.join(side_root, f"g-{cur}")
             if os.path.exists(prev):
                 rows = spark.read.parquet(prev).unionByName(rows)
             latest = KStream(rows, kcols, None).to_table(order=("__gen",)).df
             latest.write.mode("overwrite").parquet(os.path.join(side_root, f"g-{nxt}"))
-            gen["n"] += 1
-            _write_gen(side_root, gen["n"], batch_id)
 
-        q = (
-            agg_df.writeStream.outputMode("update")
-            .foreachBatch(_apply)
-            .option("checkpointLocation", side_ckpt)
-            .trigger(availableNow=True)
-            .start()
+        n, _ = _drain_ping_pong(
+            agg_df, side_root, side_ckpt, "cogroup-state", _fold, output_mode="update"
         )
-        q.awaitTermination()
         spark = df.sparkSession
-        final = os.path.join(side_root, f"g-{gen['n'] % 2}")
-        if gen["n"] > 0 and os.path.exists(final):
+        final = os.path.join(side_root, f"g-{n % 2}")
+        if n > 0 and os.path.exists(final):
             t = spark.read.parquet(final).drop("__gen")
         else:  # side never fired: schema-correct empty aggregate table
             t = spark.createDataFrame([], agg_df.schema)

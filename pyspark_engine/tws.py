@@ -6,10 +6,14 @@ table operators — the per-key scale engines behind ``engine='tws'`` (the
 contracts and designs.  ``engine='exact'`` (the parquet ping-pong loops in
 ``streaming.py``) is the differential oracle.
 
-Shared design: tagged-union changelogs, per-key state in the RocksDB state
-store, emissions written to ``out/sink_batch=<id>`` partitions (overwritten
-on crash-replay — exactly-once), and a latest-per-key snapshot fold of that
-emission log, through the Row-based ``transformWithState`` API:
+Shared design: tagged-union changelogs and per-key state in the RocksDB
+state store, through the Row-based ``transformWithState`` API.  Every drain
+opens its state dir through ``_open_state`` and runs through
+``streaming._drain_emission_log``, which overwrites each microbatch's
+``out/sink_batch=<id>`` partition, so a crash-replay rewrites it
+(exactly-once); the exact loops in ``streaming.py`` drain through its
+ping-pong twin, ``streaming._drain_ping_pong``.  Results are latest-per-key
+snapshot folds of the emission log, or the log itself:
 
 * **Native types.**  ``transformWithState`` hands the processor
   ``pyspark.sql.Row`` objects, where a nullable int64 column stays a Python
@@ -55,17 +59,23 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from .dsl import KStream, KTable
+from .dsl import KStream, KTable, _not_null
 from .protoshim import ensure_protobuf
 from .streaming import (
+    _LOG_KIND_MARKERS,
+    _asof_result,
+    _atomic_write,
+    _asof_tws_unmet,
     _bind_state_checkpoint,
+    _changelog_orders,
     _check_no_pending_compaction,
     _checkpoint,
     _check_reserved_columns,
     _container_cols,
-    _empty_emissions,
+    _drain_emission_log,
+    _emissions_since,
+    _fold_emission_log,
     _has_emissions,
     _last_committed,
     _maybe_autocompact,
@@ -107,31 +117,28 @@ def _rocksdb_provider(spark):
     comparisons and emitted timestamps would otherwise skew by the zone
     offset.  Scoping (rather than raising) keeps foreign sessions working;
     restored on exit."""
-    tz_key = "spark.sql.session.timeZone"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev_tz = spark.conf.get(tz_key)
-    except Exception:
-        prev_tz = None
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    # both sets INSIDE the protected region: an exception between them must
+    scoped = {
+        "spark.sql.streaming.stateStore.providerClass": _TWS_PROVIDER,
+        "spark.sql.session.timeZone": "UTC",
+    }
+    prev = {}
+    for k in scoped:
+        try:
+            prev[k] = spark.conf.get(k)
+        except Exception:
+            prev[k] = None
+    # every set INSIDE the protected region: an exception between them must
     # still restore whatever was already flipped (round-13 review)
     try:
-        spark.conf.set(tz_key, "UTC")
-        spark.conf.set(key, _TWS_PROVIDER)
+        for k, v in scoped.items():
+            spark.conf.set(k, v)
         yield
     finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-        if prev_tz is None:
-            spark.conf.unset(tz_key)
-        else:
-            spark.conf.set(tz_key, prev_tz)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _refuse_hard_containers(what: str, *pairs) -> None:
@@ -182,9 +189,47 @@ def _stamp_version(root: str, marker: str, version: str, populated: bool, what: 
             "drain the old run with the code that wrote it, or start a fresh state_dir"
         )
     if ver is None:
-        with open(ver_path + ".tmp", "w") as f:
-            f.write(version)
-        os.replace(ver_path + ".tmp", ver_path)
+        _atomic_write(ver_path, version)
+
+
+def _open_state(spark, root, ckpt, marker, version, what, logs, key=()) -> None:
+    """The prologue of every tws drain, in its one fixed order: heal a
+    pending compaction, bind each emission log to its checkpoint, stamp the
+    engine version, autocompact.  ``logs`` = [(bind_dir, emit_dir,
+    log_ckpt, bind_what)] — one log per streaming query (the fk join has
+    two); ``ckpt`` is the drain's checkpoint (the fk join's is the base of
+    its two).  Only the log kinds compact_emission_log can fold
+    (_LOG_KIND_MARKERS) autocompact; as-of output is never compacted."""
+    os.makedirs(root, exist_ok=True)
+    _check_no_pending_compaction(root)
+    populated = False
+    for bind_dir, emit_dir, log_ckpt, bind_what in logs:
+        has = _has_emissions(emit_dir)
+        _bind_state_checkpoint(bind_dir, log_ckpt, has, bind_what)
+        populated = populated or has or _last_committed(log_ckpt) >= 0
+    _stamp_version(root, marker, version, populated, what)
+    if marker in dict(_LOG_KIND_MARKERS):
+        _maybe_autocompact(spark, root, ckpt, key=key)
+
+
+def _fields(cols, ddl, tun=frozenset()) -> str:
+    """DDL fields ``, `c` type`` for ``cols`` — the tunneled container
+    columns (``tun``) typed binary, as value state stores them."""
+    return "".join(f", `{c}` {'binary' if c in tun else ddl[c]}" for c in cols)
+
+
+def _codec(cols, tun):
+    """``(load, store)`` for a value-state row of ``cols``: tunneled
+    container columns (``tun``) decode/encode through pickled binary
+    (_enc_c); the rest normalize on load (_norm) and store as is."""
+
+    def load(vals):
+        return [_dec_c(x) if c in tun else _norm(x) for c, x in zip(cols, vals)]
+
+    def store(vals):
+        return [_enc_c(v) if c in tun else v for c, v in zip(cols, vals)]
+
+    return load, store
 
 
 def _norm(v):
@@ -198,6 +243,24 @@ def _norm(v):
     if isinstance(v, dt.datetime) and v.tzinfo is not None:
         return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
     return v
+
+
+def _order_of(order, key_pos, null_msg):
+    """Build ``of(key, lookup)``: the changelog-order tuple of one row —
+    grouping-key columns read from ``key`` (``key_pos`` = column → index),
+    the rest from ``lookup(column)``.  The fold needs a total order per
+    key, so a null order value raises ``null_msg``."""
+
+    def of(key, lookup):
+        vals = []
+        for c in order:
+            v = _norm(key[key_pos[c]]) if c in key_pos else _norm(lookup(c))
+            if v is None:
+                raise ValueError(null_msg)
+            vals.append(v)
+        return tuple(vals)
+
+    return of
 
 
 # ------------------------------------------------------------------ tt join
@@ -235,59 +298,46 @@ def _make_tt_processor(
     l_idx = {c: i for i, c in enumerate(l_val)}
     r_idx = {c: i for i, c in enumerate(r_val)}
     out_row = Row(*out_cols)
-
-    def _load(cols, vals):
-        return [_dec_c(x) if c in tun else _norm(x) for c, x in zip(cols, vals)]
-
-    def _store(cols, vals):
-        return [_enc_c(v) if c in tun else v for c, v in zip(cols, vals)]
+    l_load, l_store = _codec(l_val, tun)
+    r_load, r_store = _codec(r_val, tun)
+    null_msg = (
+        "null order value in the tws tt-join engine — the fold needs a total "
+        "order per key; use engine='exact'"
+    )
+    l_ord_of = _order_of(lord, l_key_pos, null_msg)
+    r_ord_of = _order_of(rord, r_key_pos, null_msg)
 
     class TTJoin(StatefulProcessor):
         def init(self, handle):
             self.st = handle.getValueState("join", state_schema)
 
-        def close(self):
-            pass
-
         def handleInputRows(self, key, rows, timerValues):
-            def make_ord(order, key_pos, lookup):
-                vals = []
-                for c in order:
-                    v = _norm(key[key_pos[c]]) if c in key_pos else _norm(lookup(c))
-                    if v is None:
-                        raise ValueError(
-                            "null order value in the tws tt-join engine — the fold "
-                            "needs a total order per key; use engine='exact'"
-                        )
-                    vals.append(v)
-                return tuple(vals)
-
             st = self.st.get()
             if st is not None:
                 l_set, r_set = bool(st[0]), bool(st[1])
-                l_vals = _load(l_val, st[2 : 2 + n_l])
-                r_vals = _load(r_val, st[2 + n_l :])
+                l_vals = l_load(st[2 : 2 + n_l])
+                r_vals = r_load(st[2 + n_l :])
             else:
                 l_set = r_set = False
                 l_vals, r_vals = [None] * n_l, [None] * n_r
-            l_ord = make_ord(lord, l_key_pos, lambda c: l_vals[l_idx[c]]) if l_set else None
-            r_ord = make_ord(rord, r_key_pos, lambda c: r_vals[r_idx[c]]) if r_set else None
+            l_ord = l_ord_of(key, lambda c: l_vals[l_idx[c]]) if l_set else None
+            r_ord = r_ord_of(key, lambda c: r_vals[r_idx[c]]) if r_set else None
 
             changed = False
             for row in rows:
                 if row["__side"] == 1:
-                    ov = make_ord(lord, l_key_pos, lambda c: _norm(row[c]))
+                    ov = l_ord_of(key, lambda c: row[c])
                     if (not l_set) or ov >= l_ord:
                         l_vals = [_norm(row[c]) for c in l_val]
                         l_ord, l_set, changed = ov, True, True
                 else:
-                    ov = make_ord(rord, r_key_pos, lambda c: _norm(row[c]))
+                    ov = r_ord_of(key, lambda c: row[c])
                     if (not r_set) or ov >= r_ord:
                         r_vals = [_norm(row[c]) for c in r_val]
                         r_ord, r_set, changed = ov, True, True
             if not changed:
                 return
-            self.st.update((l_set, r_set, *_store(l_val, l_vals), *_store(r_val, r_vals)))
+            self.st.update((l_set, r_set, *l_store(l_vals), *r_store(r_vals)))
             emit = (l_set and r_set) if how == "inner" else (l_set if how == "left" else True)
             if not emit:
                 return
@@ -358,14 +408,7 @@ def join_tables_tws(
                 f"the tws tt-join engine requires equal key dtypes across sides; "
                 f"{lk}:{l_ddl[lk]} vs {rk_}:{r_ddl[rk_]} — cast one side or use engine='exact'"
             )
-    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
-    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
-    if not lord or not rord:
-        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
-    for oc, cols in ((lord, left.df.columns), (rord, right.df.columns)):
-        missing = [c for c in oc if c not in cols]
-        if missing:
-            raise ValueError(f"order columns {missing} not in the side's columns")
+    lord, rord = _changelog_orders(left, right, l_order, r_order)
     l_val = [c for c in left.df.columns if c not in l_key]
     r_val = [c for c in right.df.columns if c not in r_key]
     _refuse_hard_containers(
@@ -390,17 +433,13 @@ def join_tables_tws(
     ).df
 
     jk = [f"__jk{i}" for i in range(len(l_key))]
-    l_src, r_src = left.df, right.df
-    for k in l_key:
-        l_src = l_src.filter(F.col(k).isNotNull())  # to_table drops null keys
-    for k in r_key:
-        r_src = r_src.filter(F.col(k).isNotNull())
+    # to_table drops null keys
+    l_src, r_src = _not_null(left.df, l_key), _not_null(right.df, r_key)
 
-    def _ddl(c):
-        return l_ddl.get(c) or r_ddl[c]
+    ddl = {**r_ddl, **l_ddl}  # the sides' columns are disjoint
 
     def _ncol(c):
-        return F.lit(None).cast(_ddl(c)).alias(c)
+        return F.lit(None).cast(ddl[c]).alias(c)
 
     tagged = l_src.select(
         F.lit(1).alias("__side"),
@@ -416,37 +455,20 @@ def join_tables_tws(
         )
     )
 
-    state_schema = "__l_set boolean, __r_set boolean" + "".join(
-        f", `{c}` {'binary' if c in tun else _ddl(c)}" for c in l_val + r_val
-    )
+    state_schema = "__l_set boolean, __r_set boolean" + _fields(l_val + r_val, ddl, tun)
     out_cols = list(l_key) + out_l_val + out_r_val + ([ts_alias] if merge_ts else [])
-
-    def _out_ddl(c):
-        if merge_ts and c == ts_alias:
-            return l_ddl[left.ts]
-        if c in l_key:
-            return l_ddl[c]
-        return _ddl(c)
-
-    out_schema = ", ".join(f"`{c}` {_out_ddl(c)}" for c in out_cols)
+    out_ddl = {**ddl, **({ts_alias: l_ddl[left.ts]} if merge_ts else {})}
+    out_schema = ", ".join(f"`{c}` {out_ddl[c]}" for c in out_cols)
     l_key_pos = {c: i for i, c in enumerate(l_key)}
     r_key_pos = {c: i for i, c in enumerate(r_key)}
 
     root = state_dir or tempfile.mkdtemp(prefix="pse-ttjoin-tws-")
-    os.makedirs(root, exist_ok=True)
-    _check_no_pending_compaction(root)
     out_dir = os.path.join(root, "out")
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), _has_emissions(out_dir), "prior tt-join emissions"
+    ckpt = _checkpoint(checkpoint)
+    _open_state(
+        spark0, root, ckpt, "_PSE_TWS_TTJOIN_V", _TWS_TTJOIN_VERSION, "tws tt-join",
+        [(root, out_dir, ckpt, "prior tt-join emissions")], key=l_key,
     )
-    _stamp_version(
-        root,
-        "_PSE_TWS_TTJOIN_V",
-        _TWS_TTJOIN_VERSION,
-        _has_emissions(out_dir) or _last_committed(ckpt) >= 0,
-        "tws tt-join",
-    )
-    _maybe_autocompact(spark0, root, ckpt, key=l_key)
 
     proc = _make_tt_processor(
         state_schema,
@@ -464,26 +486,13 @@ def join_tables_tws(
         ts_alias,
         tun=frozenset(tun),
     )
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.write.mode("overwrite").parquet(os.path.join(out_dir, f"sink_batch={batch_id}"))
-
     with _rocksdb_provider(spark0):
         res = tagged.groupBy(*jk).transformWithState(proc, out_schema, "Update", "None")
-        q = (
-            res.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain_emission_log(res, ckpt, out_dir)
 
     if not _has_emissions(out_dir):
         return empty_out
-    emitted = spark0.read.parquet(out_dir)
-    snap = KStream(emitted, tuple(l_key), None).to_table(order=("sink_batch",)).df
+    snap = _fold_emission_log(spark0.read.parquet(out_dir), l_key, fk=False)
     snap = snap.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in empty_out.schema.fields]
     )
@@ -499,20 +508,12 @@ def _make_suppress_processor(state_schema, cols, key, tcol, limit_ms, out_cols, 
     StatefulProcessor = _import_stateful_processor()
     out_row = Row(*out_cols)
     NEG = -(1 << 62)
-
-    def _load(vals):
-        return [_dec_c(x) if c in tun else _norm(x) for c, x in zip(cols, vals)]
-
-    def _store(vals):
-        return [_enc_c(v) if c in tun else v for c, v in zip(cols, vals)]
+    _load, _store = _codec(cols, tun)
 
     class SuppressBuffer(StatefulProcessor):
         def init(self, handle):
             self.h = handle
             self.st = handle.getValueState("buf", state_schema)
-
-        def close(self):
-            pass
 
         def _rearm(self, entry):
             # TWS timers PERSIST across invocations (unlike GroupState
@@ -639,24 +640,16 @@ def suppress_tws(
     ddl = {f.name: f.dataType.simpleString() for f in table.df.schema.fields}
 
     root = state_dir or tempfile.mkdtemp(prefix="pse-suppress-tws-")
-    os.makedirs(root, exist_ok=True)
     out_dir = os.path.join(root, "out")
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), _has_emissions(out_dir), "prior suppress emissions"
+    ckpt = _checkpoint(checkpoint)
+    _open_state(
+        spark0, root, ckpt, "_PSE_TWS_SUPPRESS_V", _TWS_SUPPRESS_VERSION, "tws suppress",
+        [(root, out_dir, ckpt, "prior suppress emissions")],
     )
+    # this call returns only emissions newer than the last committed batch
     prior_batch = _last_committed(ckpt)
-    _stamp_version(
-        root,
-        "_PSE_TWS_SUPPRESS_V",
-        _TWS_SUPPRESS_VERSION,
-        _has_emissions(out_dir) or prior_batch >= 0,
-        "tws suppress",
-    )
-    _maybe_autocompact(spark0, root, ckpt)
 
-    sdf = src.df
-    for k in key:
-        sdf = sdf.filter(F.col(k).isNotNull())  # to_table drops null keys
+    sdf = _not_null(src.df, key)  # to_table drops null keys
     # Decoupled watermark: every row ships twice — a DATA copy with NULL
     # event time (never late-filtered, does not move the watermark) and a
     # CLOCK copy carrying ts with all value columns nulled (shuffle weight)
@@ -680,38 +673,24 @@ def suppress_tws(
         F.when(F.col("__clk") == 1, F.col(tcol)).alias("__wm_ts"),
     ).withWatermark("__wm_ts", "0 milliseconds")
 
-    state_schema = "__entry_ms long, __hist_ms long, " + ", ".join(
-        f"`{c}` {'binary' if c in tun else ddl[c]}" for c in cols
-    )
+    state_schema = "__entry_ms long, __hist_ms long" + _fields(cols, ddl, tun)
     out_schema = ", ".join(f"`{c}` {ddl[c]}" for c in cols) + ", __fired boolean"
     proc = _make_suppress_processor(
         state_schema, cols, key, tcol, limit_ms, cols + ["__fired"], tun=frozenset(tun)
     )
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        (
-            batch.select(
-                *cols,
-                F.lit("time").alias("__emit_reason"),
-                # timer-fired rows belong to the batch whose stream time
-                # passed the deadline — one earlier than the firing batch
-                (F.lit(int(batch_id)) - F.col("__fired").cast("long")).alias("__emit_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"sink_batch={batch_id}"))
+    def _emission_meta(batch: DataFrame, batch_id: int) -> DataFrame:
+        return batch.select(
+            *cols,
+            F.lit("time").alias("__emit_reason"),
+            # timer-fired rows belong to the batch whose stream time
+            # passed the deadline — one earlier than the firing batch
+            (F.lit(int(batch_id)) - F.col("__fired").cast("long")).alias("__emit_batch"),
         )
 
     with _rocksdb_provider(spark0):
         res = sdf.groupBy(*key).transformWithState(proc, out_schema, "Update", "EventTime")
-        q = (
-            res.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain_emission_log(res, ckpt, out_dir, project=_emission_meta)
 
     if store_name is not None:
         if _last_committed(ckpt) < 0:
@@ -740,16 +719,13 @@ def suppress_tws(
                 *[_view_col(c) for c in cols]
             )
         buf.createOrReplaceTempView(store_name)
-    if not _has_emissions(out_dir):
-        return _empty_emissions(spark0, table.df.schema, cols)
-    return (
-        spark0.read.parquet(out_dir)
-        .filter(F.col("sink_batch") > F.lit(int(prior_batch)))
-        .select(*cols, "__emit_reason", "__emit_batch")
-    )
+    return _emissions_since(spark0, out_dir, prior_batch, table.df.schema, cols)
 
 
 # ------------------------------------------------------------------ fk join
+
+
+_FK_NULL_ORDER = "null order value in the tws fk-join engine — use engine='exact'"
 
 
 def _make_fk_stage_a(state_schema, l_val, lord, l_key_pos, sub_cols, tun_l=frozenset()):
@@ -757,32 +733,14 @@ def _make_fk_stage_a(state_schema, l_val, lord, l_key_pos, sub_cols, tun_l=froze
     n_lv = len(l_val)
     l_idx = {c: i for i, c in enumerate(l_val)}
     out_row = Row(*sub_cols)
-
-    def _load(vals):
-        return [_dec_c(x) if c in tun_l else _norm(x) for c, x in zip(l_val, vals)]
-
-    def _store(vals):
-        return [_enc_c(v) if c in tun_l else v for c, v in zip(l_val, vals)]
+    _load, _store = _codec(l_val, tun_l)
+    ord_of = _order_of(lord, l_key_pos, _FK_NULL_ORDER)
 
     class FKResolver(StatefulProcessor):
         def init(self, handle):
             self.st = handle.getValueState("sub", state_schema)
 
-        def close(self):
-            pass
-
         def handleInputRows(self, key, rows, timerValues):
-            def make_ord(lookup):
-                vals = []
-                for c in lord:
-                    v = _norm(key[l_key_pos[c]]) if c in l_key_pos else _norm(lookup(c))
-                    if v is None:
-                        raise ValueError(
-                            "null order value in the tws fk-join engine — use engine='exact'"
-                        )
-                    vals.append(v)
-                return tuple(vals)
-
             st = self.st.get()
             if st is not None:
                 was_set, jfk = True, st[0]
@@ -790,10 +748,10 @@ def _make_fk_stage_a(state_schema, l_val, lord, l_key_pos, sub_cols, tun_l=froze
             else:
                 was_set, jfk, vals = False, None, [None] * n_lv
             old_jfk = jfk
-            cur_ord = make_ord(lambda c: vals[l_idx[c]]) if was_set else None
+            cur_ord = ord_of(key, lambda c: vals[l_idx[c]]) if was_set else None
             changed = False
             for row in rows:
-                ov = make_ord(lambda c: _norm(row[c]))
+                ov = ord_of(key, lambda c: row[c])
                 if (cur_ord is None) or ov >= cur_ord:
                     vals = [_norm(row[c]) for c in l_val]
                     jfk = row["__jfk_in"]
@@ -827,40 +785,17 @@ def _make_fk_stage_b(
     n_lk, n_lv, n_rv = len(l_key), len(l_val), len(r_val)
     r_idx = {c: i for i, c in enumerate(r_val)}
     out_row = Row(*out_cols)
-    lkv = list(l_key) + list(l_val)
-
-    def _load_r(vals):
-        return [_dec_c(x) if c in tun_r else _norm(x) for c, x in zip(r_val, vals)]
-
-    def _store_r(vals):
-        return [_enc_c(v) if c in tun_r else v for c, v in zip(r_val, vals)]
-
-    def _load_sub(vals):
-        return [_dec_c(x) if c in tun_l else _norm(x) for c, x in zip(lkv, vals)]
-
-    def _store_sub(vals):
-        return [_enc_c(v) if c in tun_l else v for c, v in zip(lkv, vals)]
+    _load_r, _store_r = _codec(r_val, tun_r)
+    _load_sub, _store_sub = _codec(list(l_key) + list(l_val), tun_l)
+    # the grouping key is the fk string, which stands in for the right key
+    r_ord_of = _order_of(rord, {rk: 0}, _FK_NULL_ORDER)
 
     class FKJoin(StatefulProcessor):
         def init(self, handle):
             self.rstate = handle.getValueState("right", r_state_schema)
             self.subs = handle.getListState("subs", subs_schema)
 
-        def close(self):
-            pass
-
         def handleInputRows(self, key, rows, timerValues):
-            def r_ord_of(lookup):
-                vals = []
-                for c in rord:
-                    v = key[0] if c == rk else _norm(lookup(c))
-                    if v is None:
-                        raise ValueError(
-                            "null order value in the tws fk-join engine — use engine='exact'"
-                        )
-                    vals.append(v)
-                return tuple(vals)
-
             st = self.rstate.get()
             if st is not None:
                 r_set = bool(st[0])
@@ -872,13 +807,13 @@ def _make_fk_stage_b(
                 for s in self.subs.get():
                     vals = _load_sub(s[1:])
                     subs[tuple(vals[:n_lk])] = {"sub": s[0], "vals": vals}
-            cur_rord = r_ord_of(lambda c: r_vals[r_idx[c]]) if r_set else None
+            cur_rord = r_ord_of(key, lambda c: r_vals[r_idx[c]]) if r_set else None
             right_changed = False
             lops = []
             for row in rows:
                 op = row["op"]
                 if op == "R":
-                    ov = r_ord_of(lambda c: _norm(row[c]))
+                    ov = r_ord_of(key, lambda c: row[c])
                     if (cur_rord is None) or ov >= cur_rord:
                         r_vals = [_norm(row[c]) for c in r_val]
                         cur_rord, r_set, right_changed = ov, True, True
@@ -971,14 +906,7 @@ def join_fk_tws(
             f"the tws fk-join engine requires equal fk/right-key dtypes; "
             f"{fk}:{l_ddl[fk]} vs {rk}:{r_ddl[rk]} — cast one side or use engine='exact'"
         )
-    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
-    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
-    if not lord or not rord:
-        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
-    for oc, cols in ((lord, l_cols), (rord, right.df.columns)):
-        missing = [c for c in oc if c not in cols]
-        if missing:
-            raise ValueError(f"order columns {missing} not in the side's columns")
+    lord, rord = _changelog_orders(left, right, l_order, r_order)
     l_val = [c for c in l_cols if c not in l_key]
     _refuse_hard_containers(
         "tws fk-join engine",
@@ -995,71 +923,35 @@ def join_fk_tws(
 
     # ---------------- state dirs, binding, versioning ----------------
     root = state_dir or tempfile.mkdtemp(prefix="pse-fkjoin-tws-")
-    os.makedirs(root, exist_ok=True)
-    _check_no_pending_compaction(root)
     subdir = os.path.join(root, "sub")
     outdir = os.path.join(root, "out")
-    os.makedirs(subdir, exist_ok=True)
     ckpt_base = _checkpoint(checkpoint)
-    ckpt_a = _bind_state_checkpoint(
-        subdir,
-        os.path.join(ckpt_base, "sub"),
-        _has_emissions(subdir),
-        "prior fk-join subscription log",
+    ckpt_a = os.path.join(ckpt_base, "sub")
+    ckpt_b = os.path.join(ckpt_base, "join")
+    _open_state(
+        spark0, root, ckpt_base, "_PSE_TWS_FKJOIN_V", _TWS_FKJOIN_VERSION, "tws fk-join",
+        [
+            (subdir, subdir, ckpt_a, "prior fk-join subscription log"),
+            (outdir, outdir, ckpt_b, "prior fk-join emissions"),
+        ],
+        key=l_key,
     )
-    ckpt_b = _bind_state_checkpoint(
-        outdir,
-        os.path.join(ckpt_base, "join"),
-        _has_emissions(outdir),
-        "prior fk-join emissions",
-    )
-    _stamp_version(
-        root,
-        "_PSE_TWS_FKJOIN_V",
-        _TWS_FKJOIN_VERSION,
-        (
-            _has_emissions(subdir)
-            or _has_emissions(outdir)
-            or _last_committed(ckpt_a) >= 0
-            or _last_committed(ckpt_b) >= 0
-        ),
-        "tws fk-join",
-    )
-    _maybe_autocompact(spark0, root, ckpt_base, key=l_key)
 
     # ---------------- stage A: subscription resolver (keyed by left PK) ----------------
-    a_src = left.df
-    for k in l_key:
-        a_src = a_src.filter(F.col(k).isNotNull())  # to_table drops null keys
-    a_in = a_src.select(
+    # to_table drops null keys
+    a_in = _not_null(left.df, l_key).select(
         *l_cols,
         F.col(fk).cast("string").alias("__jfk_in"),  # SQL-canonical join string
     )
     l_key_pos = {c: i for i, c in enumerate(l_key)}
-    state_a = "__jfk string" + "".join(
-        f", `{c}` {'binary' if c in tun_l else l_ddl[c]}" for c in l_val
-    )
+    state_a = "__jfk string" + _fields(l_val, l_ddl, tun_l)
     sub_cols = ["op", "__jfk", *l_key, *l_val]
-    sub_schema = "op string, __jfk string" + "".join(
-        f", `{c}` {l_ddl[c]}" for c in l_key + l_val
-    )
+    sub_schema = "op string, __jfk string" + _fields(l_key + l_val, l_ddl)
 
     proc_a = _make_fk_stage_a(state_a, l_val, lord, l_key_pos, sub_cols, tun_l=frozenset(tun_l))
-
-    def _sink_a(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.write.mode("overwrite").parquet(os.path.join(subdir, f"sink_batch={batch_id}"))
-
     with _rocksdb_provider(spark0):
         res_a = a_in.groupBy(*l_key).transformWithState(proc_a, sub_schema, "Update", "None")
-        qa = (
-            res_a.writeStream.foreachBatch(_sink_a)
-            .option("checkpointLocation", ckpt_a)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qa.awaitTermination()
+        _drain_emission_log(res_a, ckpt_a, subdir)
 
         # ---------------- stage B: per-fk join state over sub-log ∪ right ----------------
         sub_stream = spark0.readStream.schema(sub_schema + ", sink_batch int").parquet(subdir)
@@ -1071,8 +963,7 @@ def join_fk_tws(
             *l_val,
             *[F.lit(None).cast(r_ddl[c]).alias(c) for c in r_val],
         )
-        r_src = right.df.filter(F.col(rk).isNotNull())
-        b_r = r_src.select(
+        b_r = _not_null(right.df, [rk]).select(
             F.lit("R").alias("op"),
             F.col(rk).cast("string").alias("__jfk"),
             F.lit(None).cast("int").alias("__sub"),
@@ -1080,18 +971,10 @@ def join_fk_tws(
             *[F.col(c) for c in r_val],
         )
         b_in = b_l.unionByName(b_r)
-        state_b = "__r_set boolean" + "".join(
-            f", `{c}` {'binary' if c in tun_r else r_ddl[c]}" for c in r_val
-        )
-        subs_schema = "__sub int" + "".join(
-            f", `{c}` {'binary' if c in tun_l else l_ddl[c]}" for c in l_key + l_val
-        )
+        state_b = "__r_set boolean" + _fields(r_val, r_ddl, tun_r)
+        subs_schema = "__sub int" + _fields(l_key + l_val, l_ddl, tun_l)
         out_cols = ["op", *l_key, *l_val, *r_val]
-        out_schema = (
-            "op string"
-            + "".join(f", `{c}` {l_ddl[c]}" for c in l_key + l_val)
-            + "".join(f", `{c}` {r_ddl[c]}" for c in r_val)
-        )
+        out_schema = "op string" + _fields(l_key + l_val, l_ddl) + _fields(r_val, r_ddl)
         proc_b = _make_fk_stage_b(
             state_b,
             subs_schema,
@@ -1105,27 +988,12 @@ def join_fk_tws(
             tun_l=frozenset(tun_l),
             tun_r=frozenset(tun_r),
         )
-
-        def _sink_b(batch: DataFrame, batch_id: int) -> None:
-            if batch.isEmpty():
-                return
-            batch.write.mode("overwrite").parquet(os.path.join(outdir, f"sink_batch={batch_id}"))
-
         res_b = b_in.groupBy("__jfk").transformWithState(proc_b, out_schema, "Update", "None")
-        qb = (
-            res_b.writeStream.foreachBatch(_sink_b)
-            .option("checkpointLocation", ckpt_b)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qb.awaitTermination()
+        _drain_emission_log(res_b, ckpt_b, outdir)
 
     if not _has_emissions(outdir):
         return empty_out
-    ranked = spark0.read.parquet(outdir).withColumn(
-        "__op_rank", (F.col("op") == "U").cast("int")
-    )
-    snap = KStream(ranked, tuple(l_key), None).to_table(order=("sink_batch", "__op_rank")).df
+    snap = _fold_emission_log(spark0.read.parquet(outdir), l_key, fk=True)
     snap = snap.filter(F.col("op") == "U").select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in empty_out.schema.fields]
     )
@@ -1159,18 +1027,11 @@ def _make_asof_processor(hist_schema, r_vals, l_vals, n_key, how, tol_ms, out_co
     n_rv = len(r_vals)
     tol = _dt.timedelta(milliseconds=tol_ms) if tol_ms is not None else None
 
-    def _load_r(vals):
-        return [_dec_c(x) if c in tun_r else _norm(x) for c, x in zip(r_vals, vals)]
-
-    def _store_r(vals):
-        return [_enc_c(v) if c in tun_r else v for c, v in zip(r_vals, vals)]
+    _load_r, _store_r = _codec(r_vals, tun_r)
 
     class AsofLookup(StatefulProcessor):
         def init(self, handle):
             self.hist = handle.getListState("hist", hist_schema)
-
-        def close(self):
-            pass
 
         def handleInputRows(self, key, rows, timerValues):
             new_h, pending = [], []
@@ -1250,52 +1111,25 @@ def join_table_asof_tws(
     is the accumulated result across all drains, like the exact engine."""
     spark0 = stream.df.sparkSession
     require_tws(spark0)
-    if not stream.df.isStreaming:
-        raise ValueError("join_table_asof_streaming requires a streaming stream side")
-    if stream.ts is None or table.ts is None:
-        raise ValueError("as-of join requires ts on both sides")
-    if len(stream.key) != len(table.key):
-        raise ValueError("join key arity mismatch")
+    unmet = _asof_tws_unmet(stream, table, matched_ts)
+    if unmet is not None:
+        raise ValueError(unmet[1])
     if how not in ("inner", "left"):
         raise ValueError("as-of join supports inner|left")
     s_ddl = {f.name: f.dataType.simpleString() for f in stream.df.schema.fields}
     t_ddl = {f.name: f.dataType.simpleString() for f in table.df.schema.fields}
-    if s_ddl[stream.ts] != "timestamp" or t_ddl[table.ts] != "timestamp":
-        raise ValueError(
-            "the tws as-of engine requires timestamp ts columns on both sides "
-            f"({stream.ts}:{s_ddl[stream.ts]}, {table.ts}:{t_ddl[table.ts]}) — "
-            "use engine='exact'"
-        )
     l_key = list(stream.key)
     l_vals = [c for c in stream.df.columns if c not in l_key and c != stream.ts]
     r_vals = [c for c in table.df.columns if c not in table.key and c != table.ts]
     overlap = (set(l_vals) | {stream.ts}) & set(r_vals)
     if overlap:
         raise ValueError(f"sides must have disjoint value column names; overlap: {sorted(overlap)}")
-    _check_reserved_columns(
-        list(stream.df.columns) + list(table.df.columns) + [matched_ts],
-        {
-            "sink_batch": "emission-log partition column",
-            "__side": "history/stream union tag",
-            "__sts": "stream event-time projection",
-            "__hts": "version event-time projection",
-            **{f"__jk{i}": "join-key grouping column" for i in range(len(l_key))},
-        },
-        "tws as-of engine",
-    )
     _refuse_hard_containers(
         "tws as-of engine",
         (stream.df.schema, list(l_key) + [stream.ts]),
         (table.df.schema, list(table.key) + [table.ts]),
     )
     tun_r = _container_cols(table.df.schema, r_vals)
-
-    for lk, rk_ in zip(l_key, table.key):
-        if s_ddl[lk] != t_ddl[rk_]:
-            raise ValueError(
-                f"the tws as-of engine requires equal key dtypes across sides; "
-                f"{lk}:{s_ddl[lk]} vs {rk_}:{t_ddl[rk_]} — cast one side or use engine='exact'"
-            )
 
     root = out_dir or tempfile.mkdtemp(prefix="pse-asof-tws-")
     os.makedirs(root, exist_ok=True)
@@ -1306,15 +1140,10 @@ def join_table_asof_tws(
         )
     emit_dir = os.path.join(root, "out")
     hist_dir = os.path.join(root, "hist")
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), _has_emissions(emit_dir), "prior as-of join output"
-    )
-    _stamp_version(
-        root,
-        "_PSE_TWS_ASOF_V",
-        _TWS_ASOF_VERSION,
-        _has_emissions(emit_dir) or _last_committed(ckpt) >= 0,
-        "tws as-of join",
+    ckpt = _checkpoint(checkpoint)
+    _open_state(
+        spark0, root, ckpt, "_PSE_TWS_ASOF_V", _TWS_ASOF_VERSION, "tws as-of join",
+        [(root, emit_dir, ckpt, "prior as-of join output")],
     )
     import shutil  # noqa: PLC0415
 
@@ -1330,10 +1159,7 @@ def join_table_asof_tws(
         # against (round-13 review finding 1)
         tmp_hist = hist_dir + "-tmp"
         shutil.rmtree(tmp_hist, ignore_errors=True)
-        h = table.df
-        for k in table.key:
-            h = h.filter(F.col(k).isNotNull())
-        h.write.parquet(tmp_hist)
+        _not_null(table.df, table.key).write.parquet(tmp_hist)
         os.rename(tmp_hist, hist_dir)
 
     jk = [f"__jk{i}" for i in range(len(l_key))]
@@ -1347,10 +1173,7 @@ def join_table_asof_tws(
         *[F.lit(None).cast(s_ddl[c]).alias(c) for c in l_vals],
         *[F.col(c) for c in r_vals],
     )
-    s_src = stream.df
-    for k in l_key:
-        s_src = s_src.filter(F.col(k).isNotNull())
-    s_tagged = s_src.select(
+    s_tagged = _not_null(stream.df, l_key).select(
         F.lit(1).alias("__side"),
         *[F.col(k).alias(j) for k, j in zip(l_key, jk)],
         F.col(stream.ts).alias("__sts"),
@@ -1360,41 +1183,20 @@ def join_table_asof_tws(
     )
     tagged = h_tagged.unionByName(s_tagged)
 
-    hist_state = "__hts timestamp" + "".join(
-        f", `{c}` {'binary' if c in tun_r else t_ddl[c]}" for c in r_vals
-    )
+    hist_state = "__hts timestamp" + _fields(r_vals, t_ddl, tun_r)
     out_cols = [*l_key, stream.ts, *l_vals, *r_vals, matched_ts]
     out_schema = (
         "".join(f"`{c}` {s_ddl[c]}, " for c in l_key)
         + f"`{stream.ts}` timestamp"
-        + "".join(f", `{c}` {s_ddl[c]}" for c in l_vals)
-        + "".join(f", `{c}` {t_ddl[c]}" for c in r_vals)
+        + _fields(l_vals, s_ddl)
+        + _fields(r_vals, t_ddl)
         + f", `{matched_ts}` timestamp"
     )
     proc = _make_asof_processor(
         hist_state, r_vals, l_vals, len(l_key), how, tolerance_ms, out_cols, frozenset(tun_r)
     )
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.write.mode("overwrite").parquet(os.path.join(emit_dir, f"sink_batch={batch_id}"))
-
     with _rocksdb_provider(spark0):
         res = tagged.groupBy(*jk).transformWithState(proc, out_schema, "Update", "None")
-        q = (
-            res.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain_emission_log(res, ckpt, emit_dir)
 
-    if not _has_emissions(emit_dir):
-        empty = KStream(
-            spark0.createDataFrame([], stream.df.schema), stream.key, stream.ts
-        )
-        return empty.join_table_asof(
-            table, how=how, tolerance_ms=tolerance_ms, matched_ts=matched_ts
-        ).df
-    return spark0.read.parquet(emit_dir).drop("sink_batch")
+    return _asof_result(stream, table, how, tolerance_ms, matched_ts, emit_dir)

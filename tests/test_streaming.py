@@ -2190,6 +2190,63 @@ def test_tws_join_crash_replay_idempotent(spark, tmp_path):
 
 
 @pytest.mark.slow
+@pytest.mark.parametrize("engine", ["tws", "exact"])
+def test_asof_join_crash_replay_idempotent(spark, tmp_path, engine):
+    """Crash-replay of an as-of drain (same protocol as the join and
+    suppress replay tests: delete the newest commit marker, re-drain).  The
+    replayed microbatch overwrites its own sink_batch partition, so the
+    accumulated result holds every stream row exactly once and equals the
+    one-shot batch ``join_table_asof``."""
+    import datetime as dt
+    import os
+
+    from pyspark_engine import StreamBuilder as BatchBuilder
+    from pyspark_engine.streaming import _last_committed, join_table_asof_streaming
+
+    def t(m):
+        return dt.datetime(2024, 1, 1, 0, m)
+
+    hist = spark.createDataFrame(
+        [(1, t(0), 100), (1, t(10), 110), (2, t(5), 200)], "k long, ts timestamp, pv long"
+    )
+    vt = BatchBuilder(spark).versioned_table(hist, key="k", ts="ts", order=("pv",))
+    schema = "k long, ts timestamp, sid long"
+    batches = [[(1, t(5), 0), (2, t(1), 1)], [(1, t(12), 2)], [(2, t(7), 3), (3, t(9), 4)]]
+    src = str(tmp_path / "src")
+    for seq, rows in enumerate(batches):
+        _write_source_file(spark, rows, schema, src, seq)
+    root, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    sb = StreamingBuilder(spark)
+
+    def drain():
+        got = join_table_asof_streaming(
+            sb.file_stream(src, key="k", ts="ts", max_files_per_trigger=1),
+            vt, how="left", out_dir=root, checkpoint=ck, engine=engine,
+        )
+        return sorted(map(tuple, got.select("k", "ts", "sid", "pv", "matched_ts").collect()))
+
+    want = sorted(
+        map(
+            tuple,
+            KStream(spark.createDataFrame([r for b in batches for r in b], schema), ("k",), "ts")
+            .join_table_asof(vt, how="left")
+            .df.select("k", "ts", "sid", "pv", "matched_ts")
+            .collect(),
+        )
+    )
+    assert drain() == want
+    last = _last_committed(ck)
+    assert last >= 2
+    os.remove(os.path.join(ck, "commits", str(last)))
+    crc = os.path.join(ck, "commits", f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    got = drain()
+    assert len(got) == len(set(got)) == len(want)  # the replay duplicated nothing
+    assert got == want
+
+
+@pytest.mark.slow
 def test_join_engines_differential_random_changelogs(spark, tmp_path):
     """Engine-differential fuzz for the continuous joins: seeded random
     changelogs with MULTIPLE updates per key per microbatch, out-of-order
@@ -3122,16 +3179,17 @@ def test_removed_keyed_engine_dirs_refused_before_spark_work(spark, tmp_path, ma
         compact_emission_log(spark, str(st), str(ck), key=("pk",))
 
 
-def test_engine_none_resolution_logs_decision_record(caplog, monkeypatch, tmp_path):
+def test_engine_none_resolution_logs_decision_record(spark, caplog, monkeypatch, tmp_path):
     """Every engine=None resolution leaves one INFO record on the
     ``pyspark_engine.streaming`` logger naming the engine and the rule that
-    chose it: a _GEN dir, hard containers, no protobuf, or the default."""
+    chose it: a _GEN dir, hard containers, no protobuf, or the default —
+    and for the as-of join, the tws guard the inputs fail."""
     import logging
 
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     from pyspark_engine import protoshim
-    from pyspark_engine.streaming import _select_keyed_engine
+    from pyspark_engine.streaming import _select_asof_engine, _select_keyed_engine
 
     schema = StructType(
         [StructField("k", LongType()), StructField("lord", ArrayType(LongType()))]
@@ -3152,8 +3210,71 @@ def test_engine_none_resolution_logs_decision_record(caplog, monkeypatch, tmp_pa
     assert decide(None, [(schema, ["k"])]) == ("tws", "default")
     assert decide(str(gen_dir), [(schema, ["k"])]) == ("exact", "_GEN dir")
     assert decide(None, [(schema, ["k", "lord"])]) == ("exact", "hard containers")
+
+    # as-of: a bigint table ts fails the tws engine's timestamp-ts guard
+    stream = KStream(spark.createDataFrame([], "k long, ts timestamp, sv long"), ("k",), "ts")
+    table = KStream(spark.createDataFrame([], "k long, ts long, tv long"), ("k",), "ts").to_table()
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger="pyspark_engine.streaming"):
+        assert _select_asof_engine(stream, table, "matched_ts", None) == "exact"
+    (rec,) = [r for r in caplog.records if r.name == "pyspark_engine.streaming"]
+    assert (rec.engine, rec.rule) == ("exact", "timestamp ts")
+
     monkeypatch.setattr(protoshim, "ensure_protobuf", lambda *a, **k: False)
     assert decide(None, [(schema, ["k"])]) == ("exact", "no protobuf")
+
+
+def test_autocompact_logs_decision_record(spark, caplog, monkeypatch, tmp_path):
+    """A drain-entry autocompaction leaves one INFO record on
+    ``pyspark_engine.streaming`` carrying the compaction's kind, folded and
+    pruned partition counts and committed batch (a suppress log: the fold
+    prunes every committed partition below the newest)."""
+    import logging
+    import os
+
+    from pyspark_engine import streaming
+
+    root, ck = tmp_path / "st", tmp_path / "ck"
+    (root / "out").mkdir(parents=True)
+    (ck / "commits").mkdir(parents=True)
+    (root / "_PSE_TWS_SUPPRESS_V").write_text("1")
+    for p in (root / "_PSE_BIND", ck / "_PSE_BIND"):
+        p.write_text("token")
+    for b in range(4):
+        spark.createDataFrame([(b,)], "v long").write.parquet(str(root / "out" / f"sink_batch={b}"))
+        (ck / "commits" / str(b)).write_text("v1")
+    monkeypatch.setattr(streaming, "_AUTOCOMPACT_EVERY", 5)
+    with caplog.at_level(logging.INFO, logger="pyspark_engine.streaming"):
+        streaming._maybe_autocompact(spark, str(root), str(ck))
+        assert not caplog.records  # 4 committed partitions, below the threshold
+        monkeypatch.setattr(streaming, "_AUTOCOMPACT_EVERY", 4)
+        streaming._maybe_autocompact(spark, str(root), str(ck))
+    (rec,) = [r for r in caplog.records if r.name == "pyspark_engine.streaming"]
+    assert rec.levelno == logging.INFO
+    assert (rec.kind, rec.folded, rec.pruned, rec.committed) == ("suppress", 4, 3, 3)
+    assert os.listdir(root / "out") == ["sink_batch=3"]
+
+
+def test_run_available_now_logs_drain_sizing(spark, caplog, tmp_path):
+    """Sizing a bounded drain from its source bytes leaves one INFO record on
+    ``pyspark_engine.streaming`` with the source bytes, the chosen state
+    partition count and the session value it replaced for the drain."""
+    import logging
+    import os
+
+    src = str(tmp_path / "src")
+    _write_source_file(spark, [(1, 10), (2, 20)], "k long, v long", src, 0)
+    size = sum(
+        os.path.getsize(os.path.join(src, f)) for f in os.listdir(src) if not f.startswith(("_", "."))
+    )
+    ks = StreamingBuilder(spark).file_stream(src, key="k")
+    with caplog.at_level(logging.INFO, logger="pyspark_engine.streaming"):
+        got = run_available_now(ks.group_by_key().count(), output_mode="complete")
+    assert sorted(map(tuple, got.collect())) == [(1, 1), (2, 1)]
+    (rec,) = [r for r in caplog.records if r.name == "pyspark_engine.streaming"]
+    assert rec.source_bytes == size > 0
+    assert rec.partitions == 1
+    assert rec.session_partitions == int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
 
 
 @pytest.mark.slow
@@ -3237,12 +3358,13 @@ def test_compact_emission_log_fk_and_suppress(spark, tmp_path):
 @pytest.mark.slow
 def test_autocompact_bounds_partitions_across_drains(spark, tmp_path, monkeypatch):
     """r12 verdict task 5: the compact-every-N policy runs automatically at
-    drain entry (PSE_COMPACT_EVERY), so a long-lived resumed state dir keeps
+    drain entry (_AUTOCOMPACT_EVERY), so a long-lived resumed state dir keeps
     a bounded ``out/`` partition count — and the folded snapshot stays
     identical to an untouched twin fed the same batches with auto-compaction
     disabled."""
     import os
 
+    from pyspark_engine import streaming
     from pyspark_engine.streaming import join_tables_streaming
 
     n_drains = 8
@@ -3269,8 +3391,9 @@ def test_autocompact_bounds_partitions_across_drains(spark, tmp_path, monkeypatc
         return [e for e in os.listdir(out) if e.startswith("sink_batch=")]
 
     for i in range(1, n_drains + 1):
-        for name, every in (("auto", "3"), ("plain", "0")):
-            monkeypatch.setenv("PSE_COMPACT_EVERY", every)
+        # the plain twin's threshold is above any partition count it reaches
+        for name, every in (("auto", 3), ("plain", 10 * n_drains)):
+            monkeypatch.setattr(streaming, "_AUTOCOMPACT_EVERY", every)
             ld = dirs[name][0]
             _write_source_file(
                 spark, [(k, i * 10 + k, i) for k in range(4)], "k long, lv long, lo long", ld, i
